@@ -1,4 +1,4 @@
-"""The extraction operator: Arrow-batched ``mapInPandas`` over pages.
+"""The extraction operator: Arrow-batched ``mapInArrow`` over pages.
 
 This is the Spark re-expression of the reference's whole extraction
 dataflow (the notes/animations/slides extractors are collectively one
@@ -6,6 +6,11 @@ UDTF: document in, records out — SURVEY.md §2.10 U2). Zero per-row
 Python dispatch: one Python call per Arrow batch, the pure kernel does
 the per-document work, exactly as the reference amortizes one
 ``zipfile.ZipFile`` open across all members (`notes/extractor.py:29`).
+
+``map_rows`` is the same seam for every other per-row operator (the
+documents-wrap contract paths below, the multimodal decoders, the
+textstats normalizers): the caller writes a per-row function, the
+helper owns the spread guard, the Arrow boundary and the output build.
 
 Scale notes (100 TB design):
 - map-only: no shuffle is *required*; ``repartition_for_extract`` is an
@@ -23,14 +28,15 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
-import pandas as pd
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
+from .. import corpus
 from ..kernel import extract_document
 
 SPAN_TYPE = T.ArrayType(T.StructType([
@@ -54,67 +60,13 @@ EXTRACTED_SCHEMA = T.StructType([
 ])
 
 
-def _kernel_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    ctx = TaskContext.get()
-    pid = ctx.partitionId() if ctx is not None else -1
-    for pdf in batches:
-        urls = pdf["url"].tolist()
-        htmls = pdf["html"].tolist()
-        fallbacks = pdf["text"].tolist() if "text" in pdf.columns else [None] * len(urls)
-        out = {k: [] for k in ("url", "title", "text", "spans", "n_blocks",
-                               "error", "text_source", "charset", "in_bytes")}
-        for url, html, fb in zip(urls, htmls, fallbacks):
-            content = bytes(html) if html is not None else None
-            r = extract_document(url, content)
-            out["url"].append(url)
-            out["title"].append(r.title)
-            if r.error is None:
-                out["text"].append(r.text)
-                out["text_source"].append("kernel")
-            else:
-                out["text"].append(fb)
-                out["text_source"].append("fallback" if fb is not None else None)
-            out["spans"].append(r.spans)
-            out["n_blocks"].append(r.n_blocks)
-            out["error"].append(r.error)
-            out["charset"].append(r.charset)
-            out["in_bytes"].append(len(content) if content is not None else 0)
-        res = pd.DataFrame(out)
-        res["partition_id"] = pid
-        yield res[[f.name for f in EXTRACTED_SCHEMA.fields]]
-
-
-_ARROW_OUT_SCHEMA = None
-
-
-def _arrow_out_schema():
-    global _ARROW_OUT_SCHEMA
-    if _ARROW_OUT_SCHEMA is None:
-        import pyarrow as pa
-        _ARROW_OUT_SCHEMA = pa.schema([
-            ("url", pa.string()),
-            ("title", pa.string()),
-            ("text", pa.string()),
-            ("spans", pa.list_(pa.struct([
-                ("block_id", pa.int64()), ("path", pa.string()),
-                ("start", pa.int64()), ("end", pa.int64())]))),
-            ("n_blocks", pa.int64()),
-            ("error", pa.string()),
-            ("text_source", pa.string()),
-            ("charset", pa.string()),
-            ("partition_id", pa.int32()),
-            ("in_bytes", pa.int64()),
-        ])
-    return _ARROW_OUT_SCHEMA
-
-
 def _kernel_batches_arrow(batches):
-    """mapInArrow twin of _kernel_batches: skips the pandas layer on
-    both sides (Arrow RecordBatch in/out)."""
+    """The crawl extraction map: Arrow RecordBatch in and out, plus the
+    per-task ``partition_id`` column ``map_rows`` has no notion of."""
     import pyarrow as pa
     ctx = TaskContext.get()
     pid = ctx.partitionId() if ctx is not None else -1
-    schema = _arrow_out_schema()
+    schema = to_arrow_schema(EXTRACTED_SCHEMA)
     for rb in batches:
         names = rb.schema.names
         urls = rb.column(names.index("url")).to_pylist()
@@ -203,30 +155,38 @@ def _spread_small_input(df: DataFrame, key: str = "doc_id") -> DataFrame:
     return df.repartition(target, F.col(key))
 
 
+def map_rows(df: DataFrame, row_fn: Callable[..., Iterator[tuple]],
+             schema: T.StructType | str, key: str = "doc_id") -> DataFrame:
+    """The per-row Python map behind every decode and kernel operator:
+    one ``mapInArrow`` pass over ``df`` (after the small-input spread by
+    ``key``) that calls ``row_fn(*values)`` with each row's values in
+    ``df`` column order. ``row_fn`` yields zero or more tuples in
+    ``schema`` field order, so 1:N maps (one row per video frame or
+    histogram bin) use the same seam. The output Arrow schema is
+    derived once, on the driver, from the Spark schema."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+
+    def _apply(batches):
+        import pyarrow as pa
+        for rb in batches:
+            rows = [out for args in zip(*(c.to_pylist() for c in rb.columns))
+                    for out in row_fn(*args)]
+            cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(cols, arrow_schema)],
+                schema=arrow_schema)
+
+    return _spread_small_input(df, key).mapInArrow(_apply, schema=schema)
+
+
 DOC_EXTRACT_SCHEMA = T.StructType([
     T.StructField("url", T.StringType(), False),
     T.StructField("title", T.StringType(), True),
     T.StructField("text", T.StringType(), True),
     T.StructField("n_blocks", T.LongType(), True),
 ])
-
-
-def _make_doc_kernel_batches(wrap_name: str):
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .. import corpus
-        wrap = getattr(corpus, wrap_name)
-        for pdf in batches:
-            out = {"url": [], "title": [], "text": [], "n_blocks": []}
-            for doc_id, text in zip(pdf["doc_id"].tolist(),
-                                    pdf["text"].tolist()):
-                url = f"doc://{doc_id}"
-                r = extract_document(url, wrap(doc_id, text))
-                out["url"].append(url)
-                out["title"].append(r.title)
-                out["text"].append(r.text)
-                out["n_blocks"].append(r.n_blocks)
-            yield pd.DataFrame(out)
-    return _batches
 
 
 def extract_wrapped_documents(docs: DataFrame,
@@ -240,10 +200,16 @@ def extract_wrapped_documents(docs: DataFrame,
     DuckDB check exercises the actual kernel, not a stand-in. Both
     wraps reconstruct to the SAME expected text, so the PDF layout
     parser is graded by the same oracle as the HTML DOM walk."""
-    fn = {"html": "page_for_document", "pdf": "pdf_page_for_document",
-          "pdf15": "pdf15_page_for_document"}[wrap]
-    return _spread_small_input(docs.select("doc_id", "text")).mapInPandas(
-        _make_doc_kernel_batches(fn), schema=DOC_EXTRACT_SCHEMA)
+    wrap_fn = {"html": corpus.page_for_document,
+               "pdf": corpus.pdf_page_for_document,
+               "pdf15": corpus.pdf15_page_for_document}[wrap]
+
+    def _row(doc_id, text):
+        url = f"doc://{doc_id}"
+        r = extract_document(url, wrap_fn(doc_id, text))
+        yield url, r.title, r.text, r.n_blocks
+
+    return map_rows(docs.select("doc_id", "text"), _row, DOC_EXTRACT_SCHEMA)
 
 
 CHARSET_EXTRACT_SCHEMA = T.StructType([
@@ -256,31 +222,24 @@ CHARSET_EXTRACT_SCHEMA = T.StructType([
 _CHARSET_KINDS = ("utf-8", "utf-8-bom", "utf-16", "cp1252-meta")
 
 
-def _charset_kernel_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from .. import corpus
-    for pdf in batches:
-        out = {"doc_id": [], "charset": [], "text": []}
-        for doc_id, text in zip(pdf["doc_id"].tolist(), pdf["text"].tolist()):
-            page = corpus.page_for_document(doc_id, text).decode("utf-8")
-            kind = _CHARSET_KINDS[doc_id % 4]
-            if kind == "utf-8":
-                raw = page.encode("utf-8")
-            elif kind == "utf-8-bom":
-                raw = b"\xef\xbb\xbf" + page.encode("utf-8")
-            elif kind == "utf-16":
-                raw = page.encode("utf-16")
-            else:  # cp1252 bytes + meta declaration; the dropped <nav>
-                # carries é bytes that make the page invalid UTF-8
-                page = page.replace(
-                    "<html><body>",
-                    '<html><head><meta charset="iso-8859-1"></head>'
-                    '<body><nav class="nav">café résumé</nav>', 1)
-                raw = page.encode("cp1252")
-            r = extract_document(f"doc://{doc_id}", raw)
-            out["doc_id"].append(doc_id)
-            out["charset"].append(r.charset)
-            out["text"].append(r.text)
-        yield pd.DataFrame(out)
+def _charset_row(doc_id, text):
+    page = corpus.page_for_document(doc_id, text).decode("utf-8")
+    kind = _CHARSET_KINDS[doc_id % 4]
+    if kind == "utf-8":
+        raw = page.encode("utf-8")
+    elif kind == "utf-8-bom":
+        raw = b"\xef\xbb\xbf" + page.encode("utf-8")
+    elif kind == "utf-16":
+        raw = page.encode("utf-16")
+    else:  # cp1252 bytes + meta declaration; the dropped <nav>
+        # carries é bytes that make the page invalid UTF-8
+        page = page.replace(
+            "<html><body>",
+            '<html><head><meta charset="iso-8859-1"></head>'
+            '<body><nav class="nav">café résumé</nav>', 1)
+        raw = page.encode("cp1252")
+    r = extract_document(f"doc://{doc_id}", raw)
+    yield doc_id, r.charset, r.text
 
 
 def extract_documents_charset(docs: DataFrame) -> DataFrame:
@@ -291,21 +250,14 @@ def extract_documents_charset(docs: DataFrame) -> DataFrame:
     Because the wrap is the invertible flagship wrap and all testdata
     text is ASCII, the expected text AND charset label are both pure
     SQL expressions — DuckDB grades the sniffer itself."""
-    return _spread_small_input(docs.select("doc_id", "text")).mapInPandas(
-        _charset_kernel_batches, schema=CHARSET_EXTRACT_SCHEMA)
+    return map_rows(docs.select("doc_id", "text"), _charset_row,
+                    CHARSET_EXTRACT_SCHEMA)
 
 
-def _cjk_kernel_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from .. import corpus
-    for pdf in batches:
-        out = {"doc_id": [], "charset": [], "text": []}
-        for doc_id, text in zip(pdf["doc_id"].tolist(), pdf["text"].tolist()):
-            raw = corpus.cjk_page_for_document(doc_id, text)
-            r = extract_document(f"doc://{doc_id}", raw)
-            out["doc_id"].append(doc_id)
-            out["charset"].append(r.charset)
-            out["text"].append(r.text)
-        yield pd.DataFrame(out)
+def _cjk_row(doc_id, text):
+    r = extract_document(f"doc://{doc_id}",
+                         corpus.cjk_page_for_document(doc_id, text))
+    yield doc_id, r.charset, r.text
 
 
 def extract_documents_cjk(docs: DataFrame) -> DataFrame:
@@ -317,8 +269,8 @@ def extract_documents_cjk(docs: DataFrame) -> DataFrame:
     the WHATWG mapping (cp932/gbk/cp949/big5hkscs) — decoding with the
     narrow national-standard codec replace-mangles the extension char
     and fails the md5 check."""
-    return _spread_small_input(docs.select("doc_id", "text")).mapInPandas(
-        _cjk_kernel_batches, schema=CHARSET_EXTRACT_SCHEMA)
+    return map_rows(docs.select("doc_id", "text"), _cjk_row,
+                    CHARSET_EXTRACT_SCHEMA)
 
 
 # doc_id % 4 -> (encoding, page shape); kinds 2/3 are CJK-HEAVY minimal
@@ -327,24 +279,17 @@ def extract_documents_cjk(docs: DataFrame) -> DataFrame:
 NOBOM_CJK_REPEAT = 6
 
 
-def _nobom_kernel_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from .. import corpus
-    for pdf in batches:
-        out = {"doc_id": [], "charset": [], "text": []}
-        for doc_id, text in zip(pdf["doc_id"].tolist(), pdf["text"].tolist()):
-            kind = doc_id % 4
-            enc = "utf-16-le" if kind in (0, 2) else "utf-16-be"
-            if kind < 2:
-                page = corpus.page_for_document(doc_id, text).decode("utf-8")
-            else:
-                snippet = corpus.CJK_KINDS[kind][2]
-                page = (f"<html><body><h1>Doc {doc_id}</h1>"
-                        f"<p>{snippet * NOBOM_CJK_REPEAT}</p></body></html>")
-            r = extract_document(f"doc://{doc_id}", page.encode(enc))
-            out["doc_id"].append(doc_id)
-            out["charset"].append(r.charset)
-            out["text"].append(r.text)
-        yield pd.DataFrame(out)
+def _nobom_row(doc_id, text):
+    kind = doc_id % 4
+    enc = "utf-16-le" if kind in (0, 2) else "utf-16-be"
+    if kind < 2:
+        page = corpus.page_for_document(doc_id, text).decode("utf-8")
+    else:
+        snippet = corpus.CJK_KINDS[kind][2]
+        page = (f"<html><body><h1>Doc {doc_id}</h1>"
+                f"<p>{snippet * NOBOM_CJK_REPEAT}</p></body></html>")
+    r = extract_document(f"doc://{doc_id}", page.encode(enc))
+    yield doc_id, r.charset, r.text
 
 
 def extract_documents_utf16_nobom(docs: DataFrame) -> DataFrame:
@@ -359,22 +304,17 @@ def extract_documents_utf16_nobom(docs: DataFrame) -> DataFrame:
     shunted to latin-1 mojibake, now resolved by the common-script
     orientation scorer. The kernel must label the encoding AND recover
     the exact text (md5 vs the SQL reconstruction)."""
-    return _spread_small_input(docs.select("doc_id", "text")).mapInPandas(
-        _nobom_kernel_batches, schema=CHARSET_EXTRACT_SCHEMA)
+    return map_rows(docs.select("doc_id", "text"), _nobom_row,
+                    CHARSET_EXTRACT_SCHEMA)
 
 
-def extract_pages(pages: DataFrame, num_partitions: int | None = None,
-                  use_arrow: bool = True) -> DataFrame:
-    """pages(url, html[, text]) -> extracted (EXTRACTED_SCHEMA).
-
-    ``use_arrow=True`` routes through mapInArrow (no pandas layer on
-    either side — measurably cheaper per batch for multi-KB binary
-    rows); the mapInPandas path is kept for A/B and as the reference
-    implementation."""
+def extract_pages(pages: DataFrame,
+                  num_partitions: int | None = None) -> DataFrame:
+    """pages(url, html[, text]) -> extracted (EXTRACTED_SCHEMA): one
+    ``mapInArrow`` pass of ``_kernel_batches_arrow``, with no pandas
+    layer on either side."""
     cols = ["url", "html"] + (["text"] if "text" in pages.columns else [])
     narrow = pages.select(*cols)  # column pruning reaches the scan (F7)
     if num_partitions:
         narrow = repartition_for_extract(narrow, num_partitions)
-    if use_arrow:
-        return narrow.mapInArrow(_kernel_batches_arrow, schema=EXTRACTED_SCHEMA)
-    return narrow.mapInPandas(_kernel_batches, schema=EXTRACTED_SCHEMA)
+    return narrow.mapInArrow(_kernel_batches_arrow, schema=EXTRACTED_SCHEMA)

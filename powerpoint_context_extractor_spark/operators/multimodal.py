@@ -1,29 +1,24 @@
 """Multimodal column plumbing: opaque ``binary`` payloads with typed
-metadata, decode/feature-extract as Arrow-batched kernels.
+metadata, and decode/feature-extract operators over them.
 
-Since r3 the PNG class decodes for REAL (pure-stdlib codec, ``..png`` —
-zlib IDAT inflate, CRC checks, all five scanline filters; r4 adds RGB
-truecolor with channel-aware de-filtering; r5 adds indexed palette).
-Since r5 the WAV audio class also decodes for REAL (``..wav`` — RIFF
-chunk walk + PCM16 samples). jpeg raises an explicit ``unsupported``
-error (an honest error row beats byte-stats posing as image features);
-the video kind remains a deterministic stub behind the same seam
-(ffmpeg genuinely isn't in this container). Everything Spark-side is
-real and tested: schemas, the binary column path through parquet,
-mapInPandas batch shapes, and the metadata functions (pure built-ins,
-DuckDB-oracle-checkable).
+The decoders are real pure-stdlib codecs (PNG, JPEG, GIF, BMP, TIFF,
+WebP, WAV, FLAC, AVI, plus header probes for MP3 and Ogg). A payload a
+decoder rejects becomes an honest error row; kinds with no decoder fall
+back to a deterministic byte-statistics stub with the same shape. Each
+operator is a per-row function run through ``extract.map_rows`` (one
+``mapInArrow`` pass, zero shuffles). The ``*_payload_for_doc`` fixtures
+render a deterministic payload per documents row, so DuckDB oracles
+grade every decode exactly; the metadata functions are pure built-ins
+and are oracle-checked the same way.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .extract import _spread_small_input
+from .extract import map_rows
 from ..avi import (decode_avi, decode_bmp, render_avi,
                    render_avi_mjpeg, render_avi_rle8, render_bmp)
 from ..jpeg import (QTABLE, decode_jpeg, decode_jpeg_gray,
@@ -181,22 +176,14 @@ def _decode_payload(kind: str, payload: bytes) -> list:
     return _decode_stub(payload)
 
 
-def _feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {k: [] for k in ("doc_id", "kind", "n_bytes", "features", "error")}
-        for doc_id, payload in zip(pdf["doc_id"].tolist(), pdf["payload"].tolist()):
-            raw = bytes(payload) if payload is not None else b""
-            kind = _kind_of(raw)
-            out["doc_id"].append(doc_id)
-            out["kind"].append(kind)
-            out["n_bytes"].append(len(raw))
-            try:
-                out["features"].append(_decode_payload(kind, raw))
-                out["error"].append(None)
-            except Exception as exc:  # noqa: BLE001 — log-and-continue
-                out["features"].append(None)
-                out["error"].append(f"{type(exc).__name__}: {exc}")
-        yield pd.DataFrame(out)
+def _feature_row(doc_id, payload):
+    raw = payload or b""
+    kind = _kind_of(raw)
+    try:
+        features, error = _decode_payload(kind, raw), None
+    except Exception as exc:  # noqa: BLE001 — log-and-continue
+        features, error = None, f"{type(exc).__name__}: {exc}"
+    yield doc_id, kind, len(raw), features, error
 
 
 def extract_features(df: DataFrame, id_col: str = "doc_id",
@@ -205,8 +192,7 @@ def extract_features(df: DataFrame, id_col: str = "doc_id",
     real Spark plumbing around the decoders (real PNG, stub others)."""
     narrow = df.select(F.col(id_col).alias("doc_id"),
                        F.col(bin_col).alias("payload"))
-    return _spread_small_input(narrow).mapInPandas(
-        _feature_batches, schema=FEATURE_SCHEMA)
+    return map_rows(narrow, _feature_row, FEATURE_SCHEMA)
 
 
 # --- real-PNG contract path ------------------------------------------------
@@ -276,52 +262,27 @@ PNG_FEATURE_SCHEMA = T.StructType([
 ])
 
 
-def _png_feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {k: [] for k in ("doc_id", "width", "height", "channels",
-                               "px_sum", "px_min", "px_max")}
-        for doc_id in pdf["doc_id"].tolist():
-            w, h, ch, px = decode_png(png_payload_for_doc(doc_id))
-            out["doc_id"].append(doc_id)
-            out["width"].append(w)
-            out["height"].append(h)
-            out["channels"].append(ch)
-            out["px_sum"].append(sum(px))
-            out["px_min"].append(min(px))
-            out["px_max"].append(max(px))
-        yield pd.DataFrame(out)
+def _png_feature_row(doc_id):
+    w, h, ch, px = decode_png(png_payload_for_doc(doc_id))
+    yield doc_id, w, h, ch, sum(px), min(px), max(px)
 
 
 def extract_png_interlaced_features(docs: DataFrame) -> DataFrame:
     """Render + decode an Adam7-interlaced PNG per documents row —
     same shape and oracle as the sequential PNG path."""
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "width", "height",
-                                   "channels", "px_sum", "px_min",
-                                   "px_max")}
-            for doc_id in pdf["doc_id"].tolist():
-                w, h, ch, px = decode_png(
-                    png_interlaced_payload_for_doc(doc_id))
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["channels"].append(ch)
-                out["px_sum"].append(sum(px))
-                out["px_min"].append(min(px))
-                out["px_max"].append(max(px))
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        w, h, ch, px = decode_png(png_interlaced_payload_for_doc(doc_id))
+        yield doc_id, w, h, ch, sum(px), min(px), max(px)
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema=PNG_FEATURE_SCHEMA)
+    return map_rows(docs.select("doc_id"), _row, PNG_FEATURE_SCHEMA)
 
 
 def extract_png_features(docs: DataFrame) -> DataFrame:
     """Render + decode a real PNG per documents row and emit exact pixel
     statistics (see ``png_payload_for_doc`` for the oracle contract)."""
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _png_feature_batches, schema=PNG_FEATURE_SCHEMA)
+    return map_rows(docs.select("doc_id"), _png_feature_row,
+                    PNG_FEATURE_SCHEMA)
 
 
 PNG_RESIZE_SCHEMA = T.StructType([
@@ -345,23 +306,12 @@ def extract_png_resized(docs: DataFrame, out_w: int = 4,
     the floor-index rule and compare exactly."""
     from ..png import resize_nn
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "out_w", "out_h", "channels",
-                                   "px_sum", "px_hex")}
-            for doc_id in pdf["doc_id"].tolist():
-                w, h, ch, px = decode_png(png_payload_for_doc(doc_id))
-                r = resize_nn(w, h, px, out_w, out_h, channels=ch)
-                out["doc_id"].append(doc_id)
-                out["out_w"].append(out_w)
-                out["out_h"].append(out_h)
-                out["channels"].append(ch)
-                out["px_sum"].append(sum(r))
-                out["px_hex"].append(r.hex())
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        w, h, ch, px = decode_png(png_payload_for_doc(doc_id))
+        r = resize_nn(w, h, px, out_w, out_h, channels=ch)
+        yield doc_id, out_w, out_h, ch, sum(r), r.hex()
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema=PNG_RESIZE_SCHEMA)
+    return map_rows(docs.select("doc_id"), _row, PNG_RESIZE_SCHEMA)
 
 
 # --- real-JPEG contract path (r5) ------------------------------------------
@@ -416,22 +366,11 @@ def extract_jpeg_features(docs: DataFrame) -> DataFrame:
     exact pixel statistics — the full marker-parse + huffman + dequant
     + IDCT path runs inside Arrow batches, zero shuffles."""
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "width", "height",
-                                   "px_sum", "px_min", "px_max")}
-            for doc_id in pdf["doc_id"].tolist():
-                w, h, px = decode_jpeg_gray(jpeg_payload_for_doc(doc_id))
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["px_sum"].append(sum(px))
-                out["px_min"].append(min(px))
-                out["px_max"].append(max(px))
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        w, h, px = decode_jpeg_gray(jpeg_payload_for_doc(doc_id))
+        yield doc_id, w, h, sum(px), min(px), max(px)
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema=JPEG_FEATURE_SCHEMA)
+    return map_rows(docs.select("doc_id"), _row, JPEG_FEATURE_SCHEMA)
 
 
 # --- real color-JPEG contract path (r6, r5 VERDICT #6) ---------------------
@@ -503,24 +442,11 @@ def extract_jpeg_color_prog_features(docs: DataFrame) -> DataFrame:
     """Render + decode a progressive color JPEG per documents row —
     same shape and oracle as the baseline color path."""
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "width", "height", "ncomp",
-                                   "px_sum", "px_min", "px_max")}
-            for doc_id in pdf["doc_id"].tolist():
-                w, h, nc, px = decode_jpeg(
-                    jpeg_color_prog_payload_for_doc(doc_id))
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["ncomp"].append(nc)
-                out["px_sum"].append(sum(px))
-                out["px_min"].append(min(px))
-                out["px_max"].append(max(px))
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        w, h, nc, px = decode_jpeg(jpeg_color_prog_payload_for_doc(doc_id))
+        yield doc_id, w, h, nc, sum(px), min(px), max(px)
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema=JPEG_COLOR_FEATURE_SCHEMA)
+    return map_rows(docs.select("doc_id"), _row, JPEG_COLOR_FEATURE_SCHEMA)
 
 
 def extract_jpeg_color_features(docs: DataFrame) -> DataFrame:
@@ -530,23 +456,11 @@ def extract_jpeg_color_features(docs: DataFrame) -> DataFrame:
     upsample, and integer color conversion all run inside Arrow
     batches, zero shuffles."""
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "width", "height", "ncomp",
-                                   "px_sum", "px_min", "px_max")}
-            for doc_id in pdf["doc_id"].tolist():
-                w, h, nc, px = decode_jpeg(jpeg_color_payload_for_doc(doc_id))
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["ncomp"].append(nc)
-                out["px_sum"].append(sum(px))
-                out["px_min"].append(min(px))
-                out["px_max"].append(max(px))
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        w, h, nc, px = decode_jpeg(jpeg_color_payload_for_doc(doc_id))
+        yield doc_id, w, h, nc, sum(px), min(px), max(px)
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema=JPEG_COLOR_FEATURE_SCHEMA)
+    return map_rows(docs.select("doc_id"), _row, JPEG_COLOR_FEATURE_SCHEMA)
 
 
 # --- real-AVI (video) contract path + frame sampling (r5) ------------------
@@ -590,23 +504,13 @@ def extract_video_frames(docs: DataFrame, every: int = 2) -> DataFrame:
     if every <= 0:
         raise ValueError("extract_video_frames: every must be > 0")
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "frame_id", "px_sum",
-                                   "px_min", "px_max")}
-            for doc_id in pdf["doc_id"].tolist():
-                _w, _h, _fps, frames = decode_avi(avi_payload_for_doc(doc_id))
-                for fid in range(0, len(frames), every):
-                    px = frames[fid]
-                    out["doc_id"].append(doc_id)
-                    out["frame_id"].append(fid)
-                    out["px_sum"].append(sum(px))
-                    out["px_min"].append(min(px))
-                    out["px_max"].append(max(px))
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        _w, _h, _fps, frames = decode_avi(avi_payload_for_doc(doc_id))
+        for fid in range(0, len(frames), every):
+            px = frames[fid]
+            yield doc_id, fid, sum(px), min(px), max(px)
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema=FRAME_SAMPLE_SCHEMA)
+    return map_rows(docs.select("doc_id"), _row, FRAME_SAMPLE_SCHEMA)
 
 
 # --- BI_RLE8 compressed video contract path (r6) ---------------------------
@@ -645,22 +549,12 @@ def extract_video_rle8_frames(docs: DataFrame) -> DataFrame:
     shuffles — at 100 TB this is scan-speed like the other decode
     kernels."""
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "frame_id", "px_sum",
-                                   "px_min", "px_max")}
-            for doc_id in pdf["doc_id"].tolist():
-                _w, _h, _fps, frames = decode_avi(rle8_payload_for_doc(doc_id))
-                for fid, px in enumerate(frames):
-                    out["doc_id"].append(doc_id)
-                    out["frame_id"].append(fid)
-                    out["px_sum"].append(sum(px))
-                    out["px_min"].append(min(px))
-                    out["px_max"].append(max(px))
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        _w, _h, _fps, frames = decode_avi(rle8_payload_for_doc(doc_id))
+        for fid, px in enumerate(frames):
+            yield doc_id, fid, sum(px), min(px), max(px)
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema=FRAME_SAMPLE_SCHEMA)
+    return map_rows(docs.select("doc_id"), _row, FRAME_SAMPLE_SCHEMA)
 
 
 # --- real-WAV contract path (r5) -------------------------------------------
@@ -699,24 +593,12 @@ def extract_wav_features(docs: DataFrame) -> DataFrame:
     bytes round-trip through the actual container walk + PCM16 decode
     inside Arrow batches, zero shuffles."""
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "sample_rate", "n_samples",
-                                   "duration_ms", "abs_sum", "s_min",
-                                   "s_max")}
-            for doc_id in pdf["doc_id"].tolist():
-                rate, _ch, samples = decode_wav(wav_payload_for_doc(doc_id))
-                out["doc_id"].append(doc_id)
-                out["sample_rate"].append(rate)
-                out["n_samples"].append(len(samples))
-                out["duration_ms"].append(len(samples) * 1000 // rate)
-                out["abs_sum"].append(sum(abs(s) for s in samples))
-                out["s_min"].append(min(samples))
-                out["s_max"].append(max(samples))
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        rate, _ch, samples = decode_wav(wav_payload_for_doc(doc_id))
+        yield (doc_id, rate, len(samples), len(samples) * 1000 // rate,
+               sum(abs(s) for s in samples), min(samples), max(samples))
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema=WAV_FEATURE_SCHEMA)
+    return map_rows(docs.select("doc_id"), _row, WAV_FEATURE_SCHEMA)
 
 
 def wav_stereo_samples_for_doc(doc_id: int) -> list:
@@ -750,27 +632,16 @@ def extract_wav_stereo_features(docs: DataFrame) -> DataFrame:
     left/right split exercises genuine de-interleaving rather than a
     flat sample scan. Arrow-batched, zero shuffles."""
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "sample_rate", "n_frames",
-                                   "abs_sum_l", "abs_sum_r", "s_min",
-                                   "s_max")}
-            for doc_id in pdf["doc_id"].tolist():
-                payload = render_wav(wav_stereo_samples_for_doc(doc_id),
-                                     sample_rate=WAV_RATE, channels=2)
-                rate, n_ch, samples = decode_wav(payload)
-                left, right = samples[0::n_ch], samples[1::n_ch]
-                out["doc_id"].append(doc_id)
-                out["sample_rate"].append(rate)
-                out["n_frames"].append(len(samples) // n_ch)
-                out["abs_sum_l"].append(sum(abs(s) for s in left))
-                out["abs_sum_r"].append(sum(abs(s) for s in right))
-                out["s_min"].append(min(samples))
-                out["s_max"].append(max(samples))
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        payload = render_wav(wav_stereo_samples_for_doc(doc_id),
+                             sample_rate=WAV_RATE, channels=2)
+        rate, n_ch, samples = decode_wav(payload)
+        left, right = samples[0::n_ch], samples[1::n_ch]
+        yield (doc_id, rate, len(samples) // n_ch,
+               sum(abs(s) for s in left), sum(abs(s) for s in right),
+               min(samples), max(samples))
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema=WAV_STEREO_SCHEMA)
+    return map_rows(docs.select("doc_id"), _row, WAV_STEREO_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -830,32 +701,18 @@ def image_dhash(docs: DataFrame, payload_col: str | None = None) -> DataFrame:
     payload."""
     cols = ["doc_id"] + ([payload_col] if payload_col else [])
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "dhash_hex", "band0",
-                                   "band1", "band2", "band3")}
-            for i, doc_id in enumerate(pdf["doc_id"].tolist()):
-                if payload_col is None:
-                    payload = png_payload_for_doc(doc_id)
-                else:
-                    payload = pdf[payload_col].iloc[i]
-                    payload = bytes(payload) if payload is not None else b""
-                out["doc_id"].append(doc_id)
-                try:
-                    w, h, ch, px = decode_png(payload)
-                    rows = _dhash_rows(w, h, ch, px)
-                except Exception:   # noqa: BLE001 — honest error row
-                    out["dhash_hex"].append(None)
-                    for b in range(4):
-                        out[f"band{b}"].append(None)
-                    continue
-                out["dhash_hex"].append("".join(f"{b:02x}" for b in rows))
-                for b in range(4):
-                    out[f"band{b}"].append(rows[2 * b] * 256 + rows[2 * b + 1])
-            yield pd.DataFrame(out)
+    def _row(doc_id, payload=None):
+        if payload_col is None:
+            payload = png_payload_for_doc(doc_id)
+        try:
+            rows = _dhash_rows(*decode_png(payload or b""))
+        except Exception:   # noqa: BLE001 — honest error row
+            yield doc_id, None, None, None, None, None
+            return
+        yield (doc_id, "".join(f"{b:02x}" for b in rows),
+               *(rows[2 * b] * 256 + rows[2 * b + 1] for b in range(4)))
 
-    return _spread_small_input(docs.select(*cols)).mapInPandas(
-        _batches, schema=IMAGE_DHASH_SCHEMA)
+    return map_rows(docs.select(*cols), _row, IMAGE_DHASH_SCHEMA)
 
 
 def image_near_dup_pairs(hashes: DataFrame, id_col: str = "doc_id",
@@ -926,25 +783,12 @@ def extract_wav_ulaw_features(docs: DataFrame) -> DataFrame:
     EXPANDED samples — pinning the lossy companding math itself under
     the DuckDB gate, same shape as ``extract_wav_features``."""
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "sample_rate", "n_samples",
-                                   "duration_ms", "abs_sum", "s_min",
-                                   "s_max")}
-            for doc_id in pdf["doc_id"].tolist():
-                rate, _ch, samples = decode_wav(
-                    wav_ulaw_payload_for_doc(doc_id))
-                out["doc_id"].append(doc_id)
-                out["sample_rate"].append(rate)
-                out["n_samples"].append(len(samples))
-                out["duration_ms"].append(len(samples) * 1000 // rate)
-                out["abs_sum"].append(sum(abs(s) for s in samples))
-                out["s_min"].append(min(samples))
-                out["s_max"].append(max(samples))
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        rate, _ch, samples = decode_wav(wav_ulaw_payload_for_doc(doc_id))
+        yield (doc_id, rate, len(samples), len(samples) * 1000 // rate,
+               sum(abs(s) for s in samples), min(samples), max(samples))
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema=WAV_FEATURE_SCHEMA)
+    return map_rows(docs.select("doc_id"), _row, WAV_FEATURE_SCHEMA)
 
 
 def wav_adpcm_payload_for_doc(doc_id: int) -> bytes:
@@ -964,25 +808,12 @@ def extract_wav_adpcm_features(docs: DataFrame) -> DataFrame:
     exact statistics of the RECONSTRUCTED samples — same shape as
     ``extract_wav_features``. Arrow-batched, zero shuffles."""
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "sample_rate", "n_samples",
-                                   "duration_ms", "abs_sum", "s_min",
-                                   "s_max")}
-            for doc_id in pdf["doc_id"].tolist():
-                rate, _ch, samples = decode_wav(
-                    wav_adpcm_payload_for_doc(doc_id))
-                out["doc_id"].append(doc_id)
-                out["sample_rate"].append(rate)
-                out["n_samples"].append(len(samples))
-                out["duration_ms"].append(len(samples) * 1000 // rate)
-                out["abs_sum"].append(sum(abs(s) for s in samples))
-                out["s_min"].append(min(samples))
-                out["s_max"].append(max(samples))
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        rate, _ch, samples = decode_wav(wav_adpcm_payload_for_doc(doc_id))
+        yield (doc_id, rate, len(samples), len(samples) * 1000 // rate,
+               sum(abs(s) for s in samples), min(samples), max(samples))
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema=WAV_FEATURE_SCHEMA)
+    return map_rows(docs.select("doc_id"), _row, WAV_FEATURE_SCHEMA)
 
 
 def jpeg_prog_payload_for_doc(doc_id: int) -> bytes:
@@ -1018,23 +849,12 @@ def extract_jpeg_dri_features(docs: DataFrame) -> DataFrame:
     """Render + decode a restart-interval baseline JPEG per documents
     row — same shape and oracle as the baseline path."""
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "width", "height",
-                                   "px_sum", "px_min", "px_max")}
-            for doc_id in pdf["doc_id"].tolist():
-                w, h, nc, px = decode_jpeg(jpeg_dri_payload_for_doc(doc_id))
-                assert nc == 1
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["px_sum"].append(sum(px))
-                out["px_min"].append(min(px))
-                out["px_max"].append(max(px))
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        w, h, nc, px = decode_jpeg(jpeg_dri_payload_for_doc(doc_id))
+        assert nc == 1
+        yield doc_id, w, h, sum(px), min(px), max(px)
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema=JPEG_FEATURE_SCHEMA)
+    return map_rows(docs.select("doc_id"), _row, JPEG_FEATURE_SCHEMA)
 
 
 def jpeg_prog_sa_payload_for_doc(doc_id: int) -> bytes:
@@ -1058,24 +878,12 @@ def extract_jpeg_prog_sa_features(docs: DataFrame) -> DataFrame:
     documents row and emit exact pixel statistics — same shape and
     oracle as the baseline path."""
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "width", "height",
-                                   "px_sum", "px_min", "px_max")}
-            for doc_id in pdf["doc_id"].tolist():
-                w, h, nc, px = decode_jpeg(
-                    jpeg_prog_sa_payload_for_doc(doc_id))
-                assert nc == 1
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["px_sum"].append(sum(px))
-                out["px_min"].append(min(px))
-                out["px_max"].append(max(px))
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        w, h, nc, px = decode_jpeg(jpeg_prog_sa_payload_for_doc(doc_id))
+        assert nc == 1
+        yield doc_id, w, h, sum(px), min(px), max(px)
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema=JPEG_FEATURE_SCHEMA)
+    return map_rows(docs.select("doc_id"), _row, JPEG_FEATURE_SCHEMA)
 
 
 def extract_jpeg_prog_features(docs: DataFrame) -> DataFrame:
@@ -1083,23 +891,12 @@ def extract_jpeg_prog_features(docs: DataFrame) -> DataFrame:
     (SOF2: DC scan then AC band scan with EOB runs) and emit exact
     pixel statistics — same shape and oracle as the baseline path."""
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "width", "height",
-                                   "px_sum", "px_min", "px_max")}
-            for doc_id in pdf["doc_id"].tolist():
-                w, h, nc, px = decode_jpeg(jpeg_prog_payload_for_doc(doc_id))
-                assert nc == 1
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["px_sum"].append(sum(px))
-                out["px_min"].append(min(px))
-                out["px_max"].append(max(px))
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        w, h, nc, px = decode_jpeg(jpeg_prog_payload_for_doc(doc_id))
+        assert nc == 1
+        yield doc_id, w, h, sum(px), min(px), max(px)
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema=JPEG_FEATURE_SCHEMA)
+    return map_rows(docs.select("doc_id"), _row, JPEG_FEATURE_SCHEMA)
 
 
 # --- real-GIF contract path (r6) -------------------------------------------
@@ -1137,26 +934,12 @@ def extract_gif_features(docs: DataFrame) -> DataFrame:
     pixel statistics incl. the position-weighted sum that pins
     interlace reassembly (see ``gif_payload_for_doc``)."""
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "width", "height",
-                                   "channels", "px_sum", "px_min",
-                                   "px_max", "px_wsum")}
-            for doc_id in pdf["doc_id"].tolist():
-                w, h, ch, px = decode_gif(gif_payload_for_doc(doc_id))
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["channels"].append(ch)
-                out["px_sum"].append(sum(px))
-                out["px_min"].append(min(px))
-                out["px_max"].append(max(px))
-                out["px_wsum"].append(
-                    sum(i * v for i, v in enumerate(px)))
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        w, h, ch, px = decode_gif(gif_payload_for_doc(doc_id))
+        yield (doc_id, w, h, ch, sum(px), min(px), max(px),
+               sum(i * v for i, v in enumerate(px)))
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema=GIF_FEATURE_SCHEMA)
+    return map_rows(docs.select("doc_id"), _row, GIF_FEATURE_SCHEMA)
 
 
 # --- MJPEG AVI contract path (r6) ------------------------------------------
@@ -1200,26 +983,12 @@ def extract_video_mjpeg_frames(docs: DataFrame) -> DataFrame:
     """Render + decode a real MJPEG AVI per documents row and emit
     exact per-frame RGB statistics (see ``mjpeg_payload_for_doc``)."""
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "frame_id", "width",
-                                   "height", "px_sum", "px_min",
-                                   "px_max")}
-            for doc_id in pdf["doc_id"].tolist():
-                w, h, _fps, frames = decode_avi(
-                    mjpeg_payload_for_doc(doc_id))
-                for f, fr in enumerate(frames):
-                    out["doc_id"].append(doc_id)
-                    out["frame_id"].append(f)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["px_sum"].append(sum(fr))
-                    out["px_min"].append(min(fr))
-                    out["px_max"].append(max(fr))
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        w, h, _fps, frames = decode_avi(mjpeg_payload_for_doc(doc_id))
+        for f, fr in enumerate(frames):
+            yield doc_id, f, w, h, sum(fr), min(fr), max(fr)
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema=MJPEG_FRAME_SCHEMA)
+    return map_rows(docs.select("doc_id"), _row, MJPEG_FRAME_SCHEMA)
 
 
 # --- real-FLAC contract path (r6) ------------------------------------------
@@ -1246,25 +1015,12 @@ def extract_flac_features(docs: DataFrame) -> DataFrame:
     """Render + decode a real FLAC stream per documents row and emit
     exact sample statistics (see ``flac_samples_for_doc``)."""
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "sample_rate", "n_samples",
-                                   "duration_ms", "abs_sum", "s_min",
-                                   "s_max")}
-            for doc_id in pdf["doc_id"].tolist():
-                rate, _ch, samples = decode_flac(
-                    flac_payload_for_doc(doc_id))
-                out["doc_id"].append(doc_id)
-                out["sample_rate"].append(rate)
-                out["n_samples"].append(len(samples))
-                out["duration_ms"].append(len(samples) * 1000 // rate)
-                out["abs_sum"].append(sum(abs(s) for s in samples))
-                out["s_min"].append(min(samples))
-                out["s_max"].append(max(samples))
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        rate, _ch, samples = decode_flac(flac_payload_for_doc(doc_id))
+        yield (doc_id, rate, len(samples), len(samples) * 1000 // rate,
+               sum(abs(s) for s in samples), min(samples), max(samples))
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema=WAV_FEATURE_SCHEMA)
+    return map_rows(docs.select("doc_id"), _row, WAV_FEATURE_SCHEMA)
 
 
 # --- variable-blocksize FLAC contract path (r7) -----------------------------
@@ -1292,25 +1048,12 @@ def extract_flac_vb_features(docs: DataFrame) -> DataFrame:
     """Render + decode a variable-blocksize FLAC per documents row;
     same exact-stats shape as :func:`extract_flac_features`."""
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "sample_rate", "n_samples",
-                                   "duration_ms", "abs_sum", "s_min",
-                                   "s_max")}
-            for doc_id in pdf["doc_id"].tolist():
-                rate, _ch, samples = decode_flac(
-                    flac_vb_payload_for_doc(doc_id))
-                out["doc_id"].append(doc_id)
-                out["sample_rate"].append(rate)
-                out["n_samples"].append(len(samples))
-                out["duration_ms"].append(len(samples) * 1000 // rate)
-                out["abs_sum"].append(sum(abs(s) for s in samples))
-                out["s_min"].append(min(samples))
-                out["s_max"].append(max(samples))
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        rate, _ch, samples = decode_flac(flac_vb_payload_for_doc(doc_id))
+        yield (doc_id, rate, len(samples), len(samples) * 1000 // rate,
+               sum(abs(s) for s in samples), min(samples), max(samples))
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema=WAV_FEATURE_SCHEMA)
+    return map_rows(docs.select("doc_id"), _row, WAV_FEATURE_SCHEMA)
 
 
 # --- sub-8-bit PNG contract path (r6) --------------------------------------
@@ -1333,25 +1076,11 @@ def extract_png_lowdepth_features(docs: DataFrame) -> DataFrame:
     """Render + decode a sub-8-bit PNG per documents row — PNG error
     surface now 16-bit depth and sub-8-bit interlace only."""
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "width", "height",
-                                   "channels", "px_sum", "px_min",
-                                   "px_max")}
-            for doc_id in pdf["doc_id"].tolist():
-                w, h, ch, px = decode_png(
-                    png_lowdepth_payload_for_doc(doc_id))
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["channels"].append(ch)
-                out["px_sum"].append(sum(px))
-                out["px_min"].append(min(px))
-                out["px_max"].append(max(px))
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        w, h, ch, px = decode_png(png_lowdepth_payload_for_doc(doc_id))
+        yield doc_id, w, h, ch, sum(px), min(px), max(px)
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema=PNG_FEATURE_SCHEMA)
+    return map_rows(docs.select("doc_id"), _row, PNG_FEATURE_SCHEMA)
 
 
 # --- 16-bit PNG contract path (r6) -----------------------------------------
@@ -1372,24 +1101,11 @@ def extract_png16_features(docs: DataFrame) -> DataFrame:
     """Render + decode a 16-bit PNG per documents row — PNG error
     surface now sub-8-bit/16-bit interlace only."""
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "width", "height",
-                                   "channels", "px_sum", "px_min",
-                                   "px_max")}
-            for doc_id in pdf["doc_id"].tolist():
-                w, h, ch, px = decode_png(png16_payload_for_doc(doc_id))
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["channels"].append(ch)
-                out["px_sum"].append(sum(px))
-                out["px_min"].append(min(px))
-                out["px_max"].append(max(px))
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        w, h, ch, px = decode_png(png16_payload_for_doc(doc_id))
+        yield doc_id, w, h, ch, sum(px), min(px), max(px)
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema=PNG_FEATURE_SCHEMA)
+    return map_rows(docs.select("doc_id"), _row, PNG_FEATURE_SCHEMA)
 
 
 # --- video scene-cut detection (r6) ----------------------------------------
@@ -1406,26 +1122,14 @@ def extract_video_scene_cuts(docs: DataFrame) -> DataFrame:
     the frame byte formula. Emits (doc_id, frame_id, sad, is_cut)
     with frame_id the LATTER frame of each pair."""
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "frame_id", "sad",
-                                   "is_cut")}
-            for doc_id in pdf["doc_id"].tolist():
-                _w, _h, _fps, frames = decode_avi(
-                    avi_payload_for_doc(doc_id))
-                for f in range(1, len(frames)):
-                    sad = sum(abs(a - b) for a, b in
-                              zip(frames[f - 1], frames[f]))
-                    out["doc_id"].append(doc_id)
-                    out["frame_id"].append(f)
-                    out["sad"].append(sad)
-                    out["is_cut"].append(
-                        1 if sad > SCENE_CUT_THRESHOLD else 0)
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        _w, _h, _fps, frames = decode_avi(avi_payload_for_doc(doc_id))
+        for f in range(1, len(frames)):
+            sad = sum(abs(a - b) for a, b in zip(frames[f - 1], frames[f]))
+            yield doc_id, f, sad, 1 if sad > SCENE_CUT_THRESHOLD else 0
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches,
-        schema="doc_id long, frame_id long, sad long, is_cut long")
+    return map_rows(docs.select("doc_id"), _row,
+                    "doc_id long, frame_id long, sad long, is_cut long")
 
 
 # --- decorrelated-stereo LPC FLAC contract path (r6) -----------------------
@@ -1455,29 +1159,16 @@ def extract_flac_ms_features(docs: DataFrame) -> DataFrame:
     """Render + decode a mid/side LPC FLAC per documents row; emits
     per-channel exact statistics."""
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "sample_rate", "n_frames",
-                                   "l_abs_sum", "r_abs_sum", "s_min",
-                                   "s_max")}
-            for doc_id in pdf["doc_id"].tolist():
-                rate, ch, samples = decode_flac(
-                    flac_ms_payload_for_doc(doc_id))
-                assert ch == 2
-                left, right = samples[0::2], samples[1::2]
-                out["doc_id"].append(doc_id)
-                out["sample_rate"].append(rate)
-                out["n_frames"].append(len(left))
-                out["l_abs_sum"].append(sum(abs(s) for s in left))
-                out["r_abs_sum"].append(sum(abs(s) for s in right))
-                out["s_min"].append(min(samples))
-                out["s_max"].append(max(samples))
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        rate, ch, samples = decode_flac(flac_ms_payload_for_doc(doc_id))
+        assert ch == 2
+        left, right = samples[0::2], samples[1::2]
+        yield (doc_id, rate, len(left), sum(abs(s) for s in left),
+               sum(abs(s) for s in right), min(samples), max(samples))
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema="doc_id long, sample_rate long, n_frames long, "
-                         "l_abs_sum long, r_abs_sum long, s_min long, "
-                         "s_max long")
+    return map_rows(docs.select("doc_id"), _row,
+                    "doc_id long, sample_rate long, n_frames long, "
+                    "l_abs_sum long, r_abs_sum long, s_min long, s_max long")
 
 
 # --- image luma histogram (r6) ---------------------------------------------
@@ -1489,25 +1180,18 @@ def extract_image_histogram(docs: DataFrame, bins: int = 4) -> DataFrame:
     bins // 256. Emits (doc_id, bin, n_px) — one row per NON-EMPTY
     bin, exactly reconstructible from the palette formula."""
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "bin": [], "n_px": []}
-            for doc_id in pdf["doc_id"].tolist():
-                _w, _h, _ch, px = decode_gif(gif_payload_for_doc(doc_id))
-                counts: dict = {}
-                for i in range(0, len(px), 3):
-                    luma = (299 * px[i] + 587 * px[i + 1]
-                            + 114 * px[i + 2]) // 1000
-                    b = luma * bins // 256
-                    counts[b] = counts.get(b, 0) + 1
-                for b in sorted(counts):
-                    out["doc_id"].append(doc_id)
-                    out["bin"].append(b)
-                    out["n_px"].append(counts[b])
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        _w, _h, _ch, px = decode_gif(gif_payload_for_doc(doc_id))
+        counts: dict = {}
+        for i in range(0, len(px), 3):
+            luma = (299 * px[i] + 587 * px[i + 1] + 114 * px[i + 2]) // 1000
+            b = luma * bins // 256
+            counts[b] = counts.get(b, 0) + 1
+        for b in sorted(counts):
+            yield doc_id, b, counts[b]
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema="doc_id long, bin long, n_px long")
+    return map_rows(docs.select("doc_id"), _row,
+                    "doc_id long, bin long, n_px long")
 
 
 # --- real-TIFF contract path (r6) ------------------------------------------
@@ -1530,24 +1214,11 @@ def extract_tiff_features(docs: DataFrame) -> DataFrame:
     """Render + decode a real TIFF per documents row (IFD walk,
     out-of-line arrays, strip reassembly, both endiannesses)."""
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "width", "height",
-                                   "channels", "px_sum", "px_min",
-                                   "px_max")}
-            for doc_id in pdf["doc_id"].tolist():
-                w, h, ch, px = decode_tiff(tiff_payload_for_doc(doc_id))
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["channels"].append(ch)
-                out["px_sum"].append(sum(px))
-                out["px_min"].append(min(px))
-                out["px_max"].append(max(px))
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        w, h, ch, px = decode_tiff(tiff_payload_for_doc(doc_id))
+        yield doc_id, w, h, ch, sum(px), min(px), max(px)
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema=PNG_FEATURE_SCHEMA)
+    return map_rows(docs.select("doc_id"), _row, PNG_FEATURE_SCHEMA)
 
 
 # --- tiled multi-page TIFF contract path (r7) --------------------------------
@@ -1578,32 +1249,18 @@ def extract_tiff_tiled_features(docs: DataFrame) -> DataFrame:
     one row per PAGE with exact stats; px_wsum pins tile blitting
     (a tile placed at the wrong grid position keeps the sums but
     fails the wsum)."""
+    from ..tiff import decode_tiff_pages
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..tiff import decode_tiff_pages as _dec
-        cols = ("doc_id", "page_id", "width", "height", "channels",
-                "px_sum", "px_min", "px_max", "px_wsum")
-        for pdf in batches:
-            out = {k: [] for k in cols}
-            for doc_id in pdf["doc_id"].tolist():
-                for p, (w, h, ch, px) in enumerate(
-                        _dec(tiff_tiled_payload_for_doc(doc_id))):
-                    out["doc_id"].append(doc_id)
-                    out["page_id"].append(p)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["channels"].append(ch)
-                    out["px_sum"].append(sum(px))
-                    out["px_min"].append(min(px))
-                    out["px_max"].append(max(px))
-                    out["px_wsum"].append(
-                        sum(i * v for i, v in enumerate(px)))
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        pages = decode_tiff_pages(tiff_tiled_payload_for_doc(doc_id))
+        for p, (w, h, ch, px) in enumerate(pages):
+            yield (doc_id, p, w, h, ch, sum(px), min(px), max(px),
+                   sum(i * v for i, v in enumerate(px)))
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema="doc_id long, page_id long, width long, "
-                         "height long, channels long, px_sum long, "
-                         "px_min long, px_max long, px_wsum long")
+    return map_rows(docs.select("doc_id"), _row,
+                    "doc_id long, page_id long, width long, height long, "
+                    "channels long, px_sum long, px_min long, px_max long, "
+                    "px_wsum long")
 
 
 # --- audio resampling contract path (r7) -------------------------------------
@@ -1615,32 +1272,18 @@ def extract_audio_resample(docs: DataFrame) -> DataFrame:
     normalization pass every audio-training pipeline runs. Emits
     (doc_id, dst_rate, n_out, abs_sum, s_min, s_max, s_wsum);
     s_wsum pins sample ORDER and the interpolation phase."""
-    from ..wav import decode_wav, resample_linear
+    from ..wav import resample_linear
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("doc_id", "dst_rate", "n_out", "abs_sum", "s_min",
-                "s_max", "s_wsum")
-        for pdf in batches:
-            out = {c: [] for c in cols}
-            for doc_id in pdf["doc_id"].tolist():
-                rate, _ch, samples = decode_wav(
-                    wav_payload_for_doc(doc_id))
-                dst = 16000 if doc_id % 2 == 0 else 6000
-                y = resample_linear(samples, rate, dst)
-                out["doc_id"].append(doc_id)
-                out["dst_rate"].append(dst)
-                out["n_out"].append(len(y))
-                out["abs_sum"].append(sum(abs(v) for v in y))
-                out["s_min"].append(min(y))
-                out["s_max"].append(max(y))
-                out["s_wsum"].append(
-                    sum(j * v for j, v in enumerate(y)))
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        rate, _ch, samples = decode_wav(wav_payload_for_doc(doc_id))
+        dst = 16000 if doc_id % 2 == 0 else 6000
+        y = resample_linear(samples, rate, dst)
+        yield (doc_id, dst, len(y), sum(abs(v) for v in y), min(y), max(y),
+               sum(j * v for j, v in enumerate(y)))
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema="doc_id long, dst_rate long, n_out long, "
-                         "abs_sum long, s_min long, s_max long, "
-                         "s_wsum long")
+    return map_rows(docs.select("doc_id"), _row,
+                    "doc_id long, dst_rate long, n_out long, abs_sum long, "
+                    "s_min long, s_max long, s_wsum long")
 
 
 # --- Ogg/Vorbis probe contract path (r7) -------------------------------------
@@ -1665,27 +1308,14 @@ def probe_ogg_features(docs: DataFrame) -> DataFrame:
     duration_ms = last_granule * 1000 div rate."""
     from ..oggprobe import probe_ogg_vorbis
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("doc_id", "n_pages", "channels", "sample_rate",
-                "bitrate_nominal", "last_granule", "duration_ms")
-        for pdf in batches:
-            out = {c: [] for c in cols}
-            for doc_id in pdf["doc_id"].tolist():
-                n, ch, rate, nom, gr = probe_ogg_vorbis(
-                    ogg_payload_for_doc(doc_id))
-                out["doc_id"].append(doc_id)
-                out["n_pages"].append(n)
-                out["channels"].append(ch)
-                out["sample_rate"].append(rate)
-                out["bitrate_nominal"].append(nom)
-                out["last_granule"].append(gr)
-                out["duration_ms"].append(gr * 1000 // rate)
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        n, ch, rate, nom, gr = probe_ogg_vorbis(ogg_payload_for_doc(doc_id))
+        yield doc_id, n, ch, rate, nom, gr, gr * 1000 // rate
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema="doc_id long, n_pages long, channels long, "
-                         "sample_rate long, bitrate_nominal long, "
-                         "last_granule long, duration_ms long")
+    return map_rows(docs.select("doc_id"), _row,
+                    "doc_id long, n_pages long, channels long, "
+                    "sample_rate long, bitrate_nominal long, "
+                    "last_granule long, duration_ms long")
 
 
 # --- JPEG-in-TIFF contract path (r7) -----------------------------------------
@@ -1710,28 +1340,13 @@ def tiff_jpeg_payload_for_doc(doc_id: int) -> bytes:
 def extract_tiff_jpeg_features(docs: DataFrame) -> DataFrame:
     """Render + decode a JPEG-in-TIFF per documents row; px_wsum pins
     strip stitching order."""
-    from ..tiff import decode_tiff as _dec
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out_cols = ("doc_id", "width", "height", "channels",
-                    "px_sum", "px_min", "px_max", "px_wsum")
-        for pdf in batches:
-            out = {c: [] for c in out_cols}
-            for doc_id in pdf["doc_id"].tolist():
-                w, h, ch, px = _dec(tiff_jpeg_payload_for_doc(doc_id))
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["channels"].append(ch)
-                out["px_sum"].append(sum(px))
-                out["px_min"].append(min(px))
-                out["px_max"].append(max(px))
-                out["px_wsum"].append(
-                    sum(i * v for i, v in enumerate(px)))
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        w, h, ch, px = decode_tiff(tiff_jpeg_payload_for_doc(doc_id))
+        yield (doc_id, w, h, ch, sum(px), min(px), max(px),
+               sum(i * v for i, v in enumerate(px)))
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema=GIF_FEATURE_SCHEMA)
+    return map_rows(docs.select("doc_id"), _row, GIF_FEATURE_SCHEMA)
 
 
 # --- WebP (VP8L) contract path (r7) ------------------------------------------
@@ -1778,26 +1393,12 @@ def extract_webp_features(docs: DataFrame) -> DataFrame:
     transform or mis-bundled palette keeps sums, fails wsum)."""
     from ..webp import decode_webp
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "width", "height",
-                                   "channels", "px_sum", "px_min",
-                                   "px_max", "px_wsum")}
-            for doc_id in pdf["doc_id"].tolist():
-                w, h, ch, px = decode_webp(webp_payload_for_doc(doc_id))
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["channels"].append(ch)
-                out["px_sum"].append(sum(px))
-                out["px_min"].append(min(px))
-                out["px_max"].append(max(px))
-                out["px_wsum"].append(
-                    sum(i * v for i, v in enumerate(px)))
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        w, h, ch, px = decode_webp(webp_payload_for_doc(doc_id))
+        yield (doc_id, w, h, ch, sum(px), min(px), max(px),
+               sum(i * v for i, v in enumerate(px)))
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema=GIF_FEATURE_SCHEMA)
+    return map_rows(docs.select("doc_id"), _row, GIF_FEATURE_SCHEMA)
 
 
 # --- LZW TIFF contract path (r7) --------------------------------------------
@@ -1825,27 +1426,12 @@ def extract_tiff_lzw_features(docs: DataFrame) -> DataFrame:
     px_wsum pins sample ORDER — a decoder that mis-splices strips or
     mis-applies the predictor keeps the sums but fails the wsum."""
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..tiff import decode_tiff as _dec
-        out_cols = ("doc_id", "width", "height", "channels",
-                    "px_sum", "px_min", "px_max", "px_wsum")
-        for pdf in batches:
-            out = {k: [] for k in out_cols}
-            for doc_id in pdf["doc_id"].tolist():
-                w, h, ch, px = _dec(tiff_lzw_payload_for_doc(doc_id))
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["channels"].append(ch)
-                out["px_sum"].append(sum(px))
-                out["px_min"].append(min(px))
-                out["px_max"].append(max(px))
-                out["px_wsum"].append(
-                    sum(i * v for i, v in enumerate(px)))
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        w, h, ch, px = decode_tiff(tiff_lzw_payload_for_doc(doc_id))
+        yield (doc_id, w, h, ch, sum(px), min(px), max(px),
+               sum(i * v for i, v in enumerate(px)))
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema=GIF_FEATURE_SCHEMA)
+    return map_rows(docs.select("doc_id"), _row, GIF_FEATURE_SCHEMA)
 
 
 # --- real-BMP contract path (r6) -------------------------------------------
@@ -1862,24 +1448,11 @@ def bmp_payload_for_doc(doc_id: int) -> bytes:
 def extract_bmp_features(docs: DataFrame) -> DataFrame:
     """Render + decode a real BMP per documents row."""
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "width", "height",
-                                   "channels", "px_sum", "px_min",
-                                   "px_max")}
-            for doc_id in pdf["doc_id"].tolist():
-                w, h, ch, px = decode_bmp(bmp_payload_for_doc(doc_id))
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["channels"].append(ch)
-                out["px_sum"].append(sum(px))
-                out["px_min"].append(min(px))
-                out["px_max"].append(max(px))
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        w, h, ch, px = decode_bmp(bmp_payload_for_doc(doc_id))
+        yield doc_id, w, h, ch, sum(px), min(px), max(px)
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema=PNG_FEATURE_SCHEMA)
+    return map_rows(docs.select("doc_id"), _row, PNG_FEATURE_SCHEMA)
 
 
 # --- MP3 header-probe contract path (r6) -----------------------------------
@@ -1905,26 +1478,12 @@ def probe_mp3_features(docs: DataFrame) -> DataFrame:
     frame walk, padding bit, VBR min/max)."""
     from ..mp3probe import probe_mp3
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "n_frames", "sample_rate",
-                                   "min_kbps", "max_kbps",
-                                   "duration_ms")}
-            for doc_id in pdf["doc_id"].tolist():
-                n, rate, kmin, kmax, dur = probe_mp3(
-                    mp3_payload_for_doc(doc_id))
-                out["doc_id"].append(doc_id)
-                out["n_frames"].append(n)
-                out["sample_rate"].append(rate)
-                out["min_kbps"].append(kmin)
-                out["max_kbps"].append(kmax)
-                out["duration_ms"].append(dur)
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        yield (doc_id, *probe_mp3(mp3_payload_for_doc(doc_id)))
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema="doc_id long, n_frames long, sample_rate long,"
-                         " min_kbps long, max_kbps long,"
-                         " duration_ms long")
+    return map_rows(docs.select("doc_id"), _row,
+                    "doc_id long, n_frames long, sample_rate long, "
+                    "min_kbps long, max_kbps long, duration_ms long")
 
 
 # --- audio energy windows (r6) ---------------------------------------------
@@ -1940,27 +1499,16 @@ def extract_audio_energy(docs: DataFrame) -> DataFrame:
     is_silent) — every value a pure integer function of the WAV
     fixture formula."""
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "win_id", "energy",
-                                   "is_silent")}
-            for doc_id in pdf["doc_id"].tolist():
-                _rate, _ch, samples = decode_wav(
-                    wav_payload_for_doc(doc_id))
-                wins = [sum(s * s for s in samples[o:o + AUDIO_WIN])
-                        for o in range(0, len(samples), AUDIO_WIN)]
-                mean = sum(wins) // len(wins)
-                for w_id, en in enumerate(wins):
-                    out["doc_id"].append(doc_id)
-                    out["win_id"].append(w_id)
-                    out["energy"].append(en)
-                    out["is_silent"].append(
-                        1 if en * 100 < mean else 0)
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        _rate, _ch, samples = decode_wav(wav_payload_for_doc(doc_id))
+        wins = [sum(s * s for s in samples[o:o + AUDIO_WIN])
+                for o in range(0, len(samples), AUDIO_WIN)]
+        mean = sum(wins) // len(wins)
+        for w_id, en in enumerate(wins):
+            yield doc_id, w_id, en, 1 if en * 100 < mean else 0
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema="doc_id long, win_id long, energy long, "
-                         "is_silent long")
+    return map_rows(docs.select("doc_id"), _row,
+                    "doc_id long, win_id long, energy long, is_silent long")
 
 
 # --- GIF animation-probe contract path (r6) --------------------------------
@@ -2045,26 +1593,17 @@ def extract_gif_anim_frames(docs: DataFrame) -> DataFrame:
     delay_cs rides along from the GCE walk."""
     from ..gif import decode_gif_frames
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "frame_id", "px_sum",
-                                   "px_wsum", "delay_cs")}
-            for doc_id in pdf["doc_id"].tolist():
-                w, h, frames, delays, loops = decode_gif_frames(
-                    gif_anim_frames_payload_for_doc(doc_id))
-                assert (w, h, loops) == (GIF_ANIM_W, GIF_ANIM_H, 0)
-                for f, (rgb, delay) in enumerate(zip(frames, delays)):
-                    out["doc_id"].append(doc_id)
-                    out["frame_id"].append(f)
-                    out["px_sum"].append(sum(rgb))
-                    out["px_wsum"].append(
-                        sum(i * v for i, v in enumerate(rgb)))
-                    out["delay_cs"].append(delay)
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        w, h, frames, delays, loops = decode_gif_frames(
+            gif_anim_frames_payload_for_doc(doc_id))
+        assert (w, h, loops) == (GIF_ANIM_W, GIF_ANIM_H, 0)
+        for f, (rgb, delay) in enumerate(zip(frames, delays)):
+            yield (doc_id, f, sum(rgb),
+                   sum(i * v for i, v in enumerate(rgb)), delay)
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema="doc_id long, frame_id long, px_sum long, "
-                         "px_wsum long, delay_cs long")
+    return map_rows(docs.select("doc_id"), _row,
+                    "doc_id long, frame_id long, px_sum long, "
+                    "px_wsum long, delay_cs long")
 
 
 def extract_gif_anim_cuts(docs: DataFrame) -> DataFrame:
@@ -2076,26 +1615,15 @@ def extract_gif_anim_cuts(docs: DataFrame) -> DataFrame:
     (doc_id, frame_id, sad, is_cut), frame_id the LATTER frame."""
     from ..gif import decode_gif_frames
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "frame_id", "sad",
-                                   "is_cut")}
-            for doc_id in pdf["doc_id"].tolist():
-                _w, _h, frames, _d, _l = decode_gif_frames(
-                    gif_anim_frames_payload_for_doc(doc_id))
-                for f in range(1, len(frames)):
-                    sad = sum(abs(a - b) for a, b in
-                              zip(frames[f - 1], frames[f]))
-                    out["doc_id"].append(doc_id)
-                    out["frame_id"].append(f)
-                    out["sad"].append(sad)
-                    out["is_cut"].append(
-                        1 if sad > SCENE_CUT_THRESHOLD else 0)
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        _w, _h, frames, _d, _l = decode_gif_frames(
+            gif_anim_frames_payload_for_doc(doc_id))
+        for f in range(1, len(frames)):
+            sad = sum(abs(a - b) for a, b in zip(frames[f - 1], frames[f]))
+            yield doc_id, f, sad, 1 if sad > SCENE_CUT_THRESHOLD else 0
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches,
-        schema="doc_id long, frame_id long, sad long, is_cut long")
+    return map_rows(docs.select("doc_id"), _row,
+                    "doc_id long, frame_id long, sad long, is_cut long")
 
 
 def probe_gif_anim_features(docs: DataFrame) -> DataFrame:
@@ -2103,19 +1631,11 @@ def probe_gif_anim_features(docs: DataFrame) -> DataFrame:
     frame walk + GCE delays + NETSCAPE loop count, no pixel decode."""
     from ..gif import probe_gif_animation
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "n_frames",
-                                   "total_delay_cs", "loops")}
-            for doc_id in pdf["doc_id"].tolist():
-                n, delay, loops = probe_gif_animation(
-                    gif_anim_payload_for_doc(doc_id))
-                out["doc_id"].append(doc_id)
-                out["n_frames"].append(n)
-                out["total_delay_cs"].append(delay)
-                out["loops"].append(loops)
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        yield (doc_id, *probe_gif_animation(gif_anim_payload_for_doc(doc_id)))
 
-    return _spread_small_input(docs.select("doc_id")).mapInPandas(
-        _batches, schema="doc_id long, n_frames long, "
-                         "total_delay_cs long, loops long")
+    return map_rows(docs.select("doc_id"), _row,
+                    "doc_id long, n_frames long, total_delay_cs long, "
+                    "loops long")
+
+

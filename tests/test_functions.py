@@ -1,41 +1,5 @@
-"""Scalar helper functions (functions/text.py)."""
-
-from pyspark.sql import functions as F
-
-from powerpoint_context_extractor_spark.functions.text import (
-    cents, ms_label, portable_hash, sanitize_filename, zero_pad,
-)
-
-
-def test_text_helpers(spark):
-    df = spark.createDataFrame(
-        [('a<b>:c/d|e?f*g h.txt', 7, 1234.56, 99999, 'abc')],
-        "name string, n int, money double, ms long, s string")
-    row = df.select(
-        sanitize_filename(F.col("name")).alias("san"),
-        zero_pad(F.col("n"), "slide_").alias("pad"),
-        cents(F.col("money")).alias("c"),
-        ms_label(F.col("ms")).alias("lab"),
-        portable_hash(F.col("s")).alias("h"),
-    ).collect()[0]
-    assert row["san"] == "a_b__c_d_e_f_g_h.txt"
-    assert row["pad"] == "slide_007"
-    assert row["c"] == 123456
-    assert row["lab"] == "99999 ms"
-    assert row["h"] == 416005258  # verified == DuckDB twin in check_entry
-
-
-def test_ms_label_branches(spark):
-    df = spark.createDataFrame([(99999,), (100000,), (250000,)], "ms long")
-    out = [r["lab"] for r in df.select(
-        ms_label(F.col("ms")).alias("lab")).collect()]
-    assert out == ["99999 ms", "100 s", "250 s"]
-
-
-def test_sanitize_caps_length(spark):
-    df = spark.createDataFrame([("x" * 300,)], "name string")
-    assert len(df.select(sanitize_filename(F.col("name")).alias("s"))
-               .collect()[0]["s"]) == 100
+"""Helpers outside the operator suites: artifact sink, URL tools, NFC
+normalization and WebDataset shards."""
 
 
 def test_artifact_sink_writes_named_payload_files(spark, tmp_path):

@@ -3581,7 +3581,8 @@ def test_ogg_vorbis_probe_contract():
     # a page truncated INSIDE the 27-byte fixed header is the same
     # honest ValueError, not an IndexError from reading header fields
     # before the length check
-    for cut in (b"OggS", b"OggS\x00" + b"\x00" * 10):
+    # a stream that ends mid capture pattern is truncated, not corrupt
+    for cut in (b"Og", b"OggS", b"OggS\x00" + b"\x00" * 10):
         with pytest.raises(ValueError, match="truncated page header"):
             probe_ogg_vorbis(mono + cut)
 
@@ -3670,3 +3671,72 @@ def test_webp_lz77_distance_alphabet_cap():
             if t[0] == "copy" and t[2] > 4096]
     assert caps == [("copy", 3, _MAX_COPY_DIST)]
     assert _prefix_for_value(caps[0][2] + 120)[0] == 39
+
+
+def test_map_rows_fan_out_nulls_and_non_nullable_field(spark):
+    """map_rows: a row function yields 0, 1 or 2 rows; null inputs
+    reach nullable outputs as nulls; a non-nullable field stays
+    non-nullable in the output schema."""
+    from pyspark.sql import types as T
+
+    from powerpoint_context_extractor_spark.operators.extract import map_rows
+    schema = T.StructType([
+        T.StructField("doc_id", T.LongType(), False),
+        T.StructField("k", T.LongType()),
+        T.StructField("s", T.StringType()),
+    ])
+
+    def _row(doc_id, s):
+        for k in range(doc_id % 3):              # 0, 1 or 2 rows
+            yield doc_id, k, s
+
+    df = spark.createDataFrame([(0, "a"), (1, None), (2, "c"), (5, None)],
+                               "doc_id long, s string")
+    out = map_rows(df, _row, schema)
+    assert out.schema == schema
+    assert not out.schema["doc_id"].nullable
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, 0, None), (2, 0, "c"), (2, 1, "c"), (5, 0, None), (5, 1, None)]
+
+
+def test_map_rows_empty_partitions(spark):
+    """Empty partitions and a wholly empty input produce no rows and no
+    error, under a DDL-string schema."""
+    from powerpoint_context_extractor_spark.operators.extract import map_rows
+
+    def _row(doc_id):
+        yield doc_id, doc_id * 2
+
+    sparse = spark.range(0, 2, numPartitions=6).withColumnRenamed(
+        "id", "doc_id")
+    assert sorted(tuple(r) for r in map_rows(
+        sparse, _row, "doc_id long, twice long").collect()) == [(0, 0), (1, 2)]
+    empty = map_rows(sparse.filter("doc_id < 0"), _row,
+                     "doc_id long, twice long")
+    assert empty.count() == 0
+    assert empty.columns == ["doc_id", "twice"]
+
+
+def test_map_rows_spreads_single_row_group_parquet(spark, tmp_path):
+    """A one-file, one-row-group parquet scans as one working task;
+    map_rows hash-spreads it by key so the row function runs in more
+    than one partition, with the row set unchanged."""
+    import pyarrow.parquet as pq
+    from pyspark import TaskContext
+
+    from powerpoint_context_extractor_spark.operators.extract import map_rows
+    path = str(tmp_path / "one_group")
+    spark.range(0, 64).withColumnRenamed("id", "doc_id").coalesce(1) \
+        .write.parquet(path)
+    files = [f for f in (tmp_path / "one_group").iterdir()
+             if f.suffix == ".parquet"]
+    assert len(files) == 1
+    assert pq.ParquetFile(files[0]).metadata.num_row_groups == 1
+
+    def _row(doc_id):
+        yield doc_id, TaskContext.get().partitionId()
+
+    got = map_rows(spark.read.parquet(path), _row,
+                   "doc_id long, pid long").collect()
+    assert sorted(r["doc_id"] for r in got) == list(range(64))
+    assert len({r["pid"] for r in got}) > 1
