@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extract import extract_pages
+from ..sources.pagegen import PAGES_SCHEMA
 from ..sources.table_io import SnapshotTable
 
 LINEAGE_COLS = ("run_id", "partition_id", "input_split", "row_count",
@@ -84,17 +85,9 @@ def write_pages_table(spark: SparkSession, rows_iter, out_dir: str,
     """Materialize a pages parquet dataset from corpus rows (driver-side
     generator -> distributed parquet). Used by tests/bench only; real
     deployments read an existing Iceberg/WARC-derived table."""
-    from ..operators.extract import EXTRACTED_SCHEMA  # noqa: F401 (schema sibling)
-    import pyspark.sql.types as T
-    schema = T.StructType([
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), True),
-        T.StructField("html", T.BinaryType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-    ])
     rows = list(rows_iter)
-    df = spark.createDataFrame(rows, schema=schema).repartition(num_partitions)
+    df = spark.createDataFrame(rows, schema=PAGES_SCHEMA) \
+        .repartition(num_partitions)
     df.write.mode("overwrite").parquet(out_dir)
     return len(rows)
 

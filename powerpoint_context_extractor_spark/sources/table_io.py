@@ -1,4 +1,4 @@
-"""Iceberg-emulated snapshot tables: Parquet data + ``_snapshots.json``.
+"""Iceberg-emulated snapshot tables: Parquet data + ``_snapshots.jsonl``.
 
 The reference has no checkpointing — reruns redo everything
 (`pptx_extract.py:184-191` only re-filters). At 10^12-doc scale resume
@@ -10,31 +10,35 @@ API; no jars are available in this sandbox, SURVEY.md §7).
 
 Commit protocol (write-data-then-manifest-append):
   1. Spark writes the batch to ``<root>/snap-<uuid>/`` (has _SUCCESS).
-  2. One JSON line {snapshot_id, files, row_count, run_id,
-     committed_at} is appended to ``_snapshots.jsonl`` with a single
-     O_APPEND write.
+  2. One JSON line {snapshot_id, run_id, files, row_count, schema,
+     committed_at} — plus ``replaces`` for a compaction/merge — is
+     appended to ``_snapshots.jsonl`` with a single O_APPEND write.
+Every commit (append, compact, merge) goes through ``_write`` and
+``_commit``; compact and merge share one owner-token lock with a
+heartbeat.
 Readers union only manifest-listed files, so half-written directories
 are invisible (snapshot isolation). The append-log commit is O(1) in
 snapshot count (r2 VERDICT: the old whole-file rewrite was O(n^2) over
 commits and raced under concurrent committers — a single O_APPEND
 write of one line neither rereads nor clobbers other writers' entries;
 on a real object store this seam is where the Iceberg catalog's
-optimistic-swap goes). Legacy ``_snapshots.json`` manifests are still
-read (migration).
+optimistic-swap goes).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import threading
+import time
 import uuid
+from contextlib import contextmanager
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST = "_snapshots.jsonl"
-LEGACY_MANIFEST = "_snapshots.json"
 
 
 def _footer_row_count(files: list) -> int:
@@ -54,10 +58,6 @@ class SnapshotTable:
     def _manifest_path(self) -> str:
         return os.path.join(self.root, MANIFEST)
 
-    @property
-    def _legacy_manifest_path(self) -> str:
-        return os.path.join(self.root, LEGACY_MANIFEST)
-
     def _entries(self) -> list:
         """Raw manifest entries in commit order (compactions included).
 
@@ -67,9 +67,6 @@ class SnapshotTable:
         semantics. A malformed line ANYWHERE ELSE is real corruption
         and still raises (ADVICE r3)."""
         snaps = []
-        if os.path.exists(self._legacy_manifest_path):  # pre-r3 tables
-            with open(self._legacy_manifest_path, encoding="utf-8") as f:
-                snaps.extend(json.load(f)["snapshots"])
         if os.path.exists(self._manifest_path):
             with open(self._manifest_path, encoding="utf-8") as f:
                 lines = [ln for ln in f if ln.strip()]
@@ -82,19 +79,25 @@ class SnapshotTable:
                     raise
         return snaps
 
-    def snapshots(self) -> list:
-        """LIVE snapshots: replay the append-log, letting a compaction
-        entry supersede the snapshot ids it lists in ``replaces`` (the
-        Iceberg rewrite-files/replace-commit analog). Readers that
-        captured file lists before a compaction keep reading the old
-        files untouched — snapshot isolation holds; ``vacuum()`` is the
-        separate, explicitly-invoked destructive step."""
+    @staticmethod
+    def _replay(entries: list) -> list:
+        """LIVE snapshots after replaying ``entries`` (a prefix of the
+        append-log): a compaction entry supersedes the snapshot ids it
+        lists in ``replaces`` (the Iceberg rewrite-files/replace-commit
+        analog)."""
         live: dict = {}
-        for e in self._entries():
+        for e in entries:
             for rid in e.get("replaces", ()):  # compaction supersedes
                 live.pop(rid, None)
             live[e["snapshot_id"]] = e
         return list(live.values())
+
+    def snapshots(self) -> list:
+        """LIVE snapshots: replay the whole append-log. Readers that
+        captured file lists before a compaction keep reading the old
+        files untouched — snapshot isolation holds; ``vacuum()`` is the
+        separate, explicitly-invoked destructive step."""
+        return self._replay(self._entries())
 
     def _commit(self, entry: dict) -> None:
         """O(1) in snapshot count: one O_APPEND write of one JSON line.
@@ -130,21 +133,18 @@ class SnapshotTable:
                   ("smallint", "bigint"), ("int", "bigint"),
                   ("float", "double")}
 
-    def _snap_schema(self, spark: SparkSession, snap: dict) -> list:
-        """(name, simple type) pairs for one snapshot: the manifest
-        records the schema at commit time (r6+); pre-r6 entries derive
-        it once from the snapshot's own parquet footer."""
-        if "schema" in snap:
-            return [tuple(c) for c in snap["schema"]]
-        st = spark.read.parquet(snap["files"][0]).schema
-        return [(f.name, f.dataType.simpleString()) for f in st]
+    @staticmethod
+    def _snap_schema(snap: dict) -> list:
+        """(name, simple type) pairs the manifest recorded for one
+        snapshot at commit time."""
+        return [tuple(c) for c in snap["schema"]]
 
     def table_schema(self, spark: SparkSession) -> list | None:
         """Current schema = the LATEST live snapshot's schema (adds
         and widenings land by appending; a column absent from the
         newest snapshot is dropped from evolved reads)."""
         snaps = self.snapshots()
-        return self._snap_schema(spark, snaps[-1]) if snaps else None
+        return self._snap_schema(snaps[-1]) if snaps else None
 
     def _check_evolution(self, cur: list | None, new: list) -> None:
         if cur is None:
@@ -172,10 +172,10 @@ class SnapshotTable:
         snaps = self.snapshots()
         if not snaps:
             return None
-        latest = self._snap_schema(spark, snaps[-1])
+        latest = self._snap_schema(snaps[-1])
         groups: dict = {}
         for s in snaps:
-            key = tuple(self._snap_schema(spark, s))
+            key = tuple(self._snap_schema(s))
             groups.setdefault(key, []).extend(s["files"])
         out = None
         for key, files in groups.items():
@@ -188,17 +188,16 @@ class SnapshotTable:
         return out
 
     # -- IO --------------------------------------------------------------
-    def append(self, df: DataFrame, run_id: str,
+    def _write(self, df: DataFrame, run_id: str,
+               replaces: list | None = None,
                write_options: dict | None = None) -> dict:
-        """``write_options`` are passed to the parquet writer (r8 seam:
-        the extraction sink sets ``parquet.enable.dictionary=false`` —
-        its url/text/spans columns are unique per row, so dictionary
-        encoding always falls back after burning the page-build CPU;
-        measured 11% off the sf1.0 extract+write wall, same bytes)."""
-        new_schema = [(f.name, f.dataType.simpleString())
-                      for f in df.schema.fields]
-        self._check_evolution(self.table_schema(df.sparkSession),
-                              new_schema)
+        """The one snapshot-write path: check the schema evolution,
+        write ``df`` to a fresh ``snap-<uuid>/`` and return its manifest
+        entry UNCOMMITTED (callers decide when to ``_commit`` it).
+        ``replaces`` marks a replace commit (compaction/merge)."""
+        schema = [(f.name, f.dataType.simpleString())
+                  for f in df.schema.fields]
+        self._check_evolution(self.table_schema(df.sparkSession), schema)
         snap_id = uuid.uuid4().hex
         out_dir = os.path.join(self.root, f"snap-{snap_id}")
         w = df.write.mode("error")
@@ -208,19 +207,30 @@ class SnapshotTable:
         files = sorted(
             os.path.join(out_dir, f) for f in os.listdir(out_dir)
             if f.endswith(".parquet"))
-        # O(metadata) commit: row counts come from the parquet footers
-        # (what a real Iceberg manifest records), NOT a second Spark
-        # scan of the just-written data — at 100 TB a count() here
-        # re-reads every committed batch.
-        row_count = _footer_row_count(files)
         entry = {
             "snapshot_id": snap_id,
             "run_id": run_id,
             "files": files,
-            "row_count": row_count,
-            "schema": [list(c) for c in new_schema],
-            "committed_at": datetime.now(timezone.utc).isoformat(),
+            # O(metadata) commit: row counts come from the parquet
+            # footers (what a real Iceberg manifest records), NOT a
+            # second Spark scan of the just-written data — at 100 TB a
+            # count() here re-reads every committed batch.
+            "row_count": _footer_row_count(files),
+            "schema": [list(c) for c in schema],
         }
+        if replaces is not None:
+            entry["replaces"] = replaces
+        entry["committed_at"] = datetime.now(timezone.utc).isoformat()
+        return entry
+
+    def append(self, df: DataFrame, run_id: str,
+               write_options: dict | None = None) -> dict:
+        """``write_options`` are passed to the parquet writer (r8 seam:
+        the extraction sink sets ``parquet.enable.dictionary=false`` —
+        its url/text/spans columns are unique per row, so dictionary
+        encoding always falls back after burning the page-build CPU;
+        measured 11% off the sf1.0 extract+write wall, same bytes)."""
+        entry = self._write(df, run_id, write_options=write_options)
         self._commit(entry)
         return entry
 
@@ -240,8 +250,6 @@ class SnapshotTable:
         e.g. across a long GC/VM pause) aborts the commit instead of
         double-committing, and never deletes the new holder's lock.
         Returns (lock_path, owner_token)."""
-        import time
-
         lock = os.path.join(self.root, "_compact.lock")
         token = uuid.uuid4().hex
 
@@ -283,6 +291,50 @@ class SnapshotTable:
         except (OSError, IndexError):
             return False
 
+    @contextmanager
+    def _compact_lock(self, stale_lock_s: float):
+        """Hold ``_compact.lock`` for one replace-commit (compact or
+        merge): acquire, heartbeat the lock's mtime from a daemon
+        thread so a LIVE holder running longer than ``stale_lock_s``
+        never looks stale, and release only while still the owner —
+        never deleting a new holder's lock. Yields a check that raises
+        if ownership was lost (the lock went stale despite the
+        heartbeat — e.g. a multi-minute VM pause): the caller then
+        ABORTS its replace-commit; the rewrite dir is unreferenced
+        garbage that vacuum ignores and the new holder proceeds alone."""
+        lock, token = self._acquire_compact_lock(stale_lock_s)
+        stop = threading.Event()
+        beat_s = max(min(stale_lock_s / 4.0, 60.0), 0.05)
+
+        def _heartbeat() -> None:
+            while not stop.wait(beat_s):
+                if not self._owns_compact_lock(lock, token):
+                    return                # ownership lost: stop touching
+                try:
+                    os.utime(lock)
+                except OSError:
+                    return
+
+        def _check_owner() -> None:
+            if not self._owns_compact_lock(lock, token):
+                raise RuntimeError(
+                    f"lost {lock} ownership before commit; aborting "
+                    "replace-commit (another compactor took over)")
+
+        t = threading.Thread(target=_heartbeat, daemon=True,
+                             name="pcx-compact-heartbeat")
+        t.start()
+        try:
+            yield _check_owner
+        finally:
+            stop.set()
+            t.join(timeout=5.0)
+            if self._owns_compact_lock(lock, token):
+                try:
+                    os.unlink(lock)
+                except FileNotFoundError:
+                    pass
+
     def compact(self, spark: SparkSession, run_id: str = "compact",
                 key_col: str | None = None,
                 order_col: str | None = None,
@@ -302,90 +354,32 @@ class SnapshotTable:
         rewrite. A crashed compactor's lock goes stale after
         ``stale_lock_s`` and is broken race-free; a LIVE compactor
         running longer than ``stale_lock_s`` (plausible at the 100 TB
-        scale this targets) is protected by a heartbeat thread that
-        refreshes the lock's mtime, and — belt over braces — by owner-
-        token verification immediately before the replace-commit and
-        the final unlink (r4 ADVICE #1: a slow original must neither
-        double-commit after losing the lock nor delete the new
-        holder's lock). On a real Iceberg catalog this seam is the
-        optimistic-swap conflict the catalog rejects."""
-        import threading
-
-        lock, token = self._acquire_compact_lock(stale_lock_s)
-        stop = threading.Event()
-        beat_s = max(min(stale_lock_s / 4.0, 60.0), 0.05)
-
-        def _heartbeat() -> None:
-            while not stop.wait(beat_s):
-                if not self._owns_compact_lock(lock, token):
-                    return                # ownership lost: stop touching
-                try:
-                    os.utime(lock)
-                except OSError:
-                    return
-
-        t = threading.Thread(target=_heartbeat, daemon=True,
-                             name="pcx-compact-heartbeat")
-        t.start()
-        try:
-            return self._compact_locked(spark, run_id, key_col, order_col,
-                                        lock=lock, token=token)
-        finally:
-            stop.set()
-            t.join(timeout=5.0)
-            if self._owns_compact_lock(lock, token):
-                try:
-                    os.unlink(lock)
-                except FileNotFoundError:
-                    pass
-
-    def _compact_locked(self, spark: SparkSession, run_id: str,
-                        key_col: str | None,
-                        order_col: str | None,
-                        lock: str | None = None,
-                        token: str | None = None) -> dict | None:
-        snaps = self.snapshots()
-        files = [f for s in snaps for f in s["files"]]
-        if not files:
-            return None
-        # evolved read: compaction across schema versions projects to
-        # the latest schema instead of trusting one footer's layout
-        df = self.read_evolved(spark)
-        if key_col is not None:
-            from pyspark.sql import Window as W
-            from pyspark.sql import functions as F
-            if order_col is None:
-                raise ValueError("key_col compaction needs order_col")
-            rn = F.row_number().over(
-                W.partitionBy(key_col).orderBy(F.col(order_col).desc()))
-            df = (df.withColumn("_rn", rn).filter(F.col("_rn") == 1)
-                  .drop("_rn"))
-        snap_id = uuid.uuid4().hex
-        out_dir = os.path.join(self.root, f"snap-{snap_id}")
-        df.write.mode("error").parquet(out_dir)
-        new_files = sorted(
-            os.path.join(out_dir, f) for f in os.listdir(out_dir)
-            if f.endswith(".parquet"))
-        entry = {
-            "snapshot_id": snap_id,
-            "run_id": run_id,
-            "files": new_files,
-            "row_count": _footer_row_count(new_files),
-            "schema": [[f.name, f.dataType.simpleString()]
-                       for f in df.schema.fields],
-            "replaces": [s["snapshot_id"] for s in snaps],
-            "committed_at": datetime.now(timezone.utc).isoformat(),
-        }
-        if lock is not None and not self._owns_compact_lock(lock, token):
-            # ownership was lost mid-rewrite (lock went stale despite
-            # the heartbeat — e.g. a multi-minute VM pause): ABORT the
-            # replace-commit; the rewrite dir is unreferenced garbage
-            # that vacuum ignores and the new lock holder proceeds alone
-            raise RuntimeError(
-                f"compaction lost {lock} ownership before commit; "
-                "aborting replace-commit (another compactor took over)")
-        self._commit(entry)
-        return entry
+        scale this targets) is protected by the lock's heartbeat, and —
+        belt over braces — by owner-token verification immediately
+        before the replace-commit and the final unlink (r4 ADVICE #1: a
+        slow original must neither double-commit after losing the lock
+        nor delete the new holder's lock). On a real Iceberg catalog
+        this seam is the optimistic-swap conflict the catalog rejects."""
+        with self._compact_lock(stale_lock_s) as check_owner:
+            snaps = self.snapshots()
+            if not any(s["files"] for s in snaps):
+                return None
+            # evolved read: compaction across schema versions projects
+            # to the latest schema instead of trusting one footer's layout
+            df = self.read_evolved(spark)
+            if key_col is not None:
+                from pyspark.sql import Window as W
+                if order_col is None:
+                    raise ValueError("key_col compaction needs order_col")
+                rn = F.row_number().over(
+                    W.partitionBy(key_col).orderBy(F.col(order_col).desc()))
+                df = (df.withColumn("_rn", rn).filter(F.col("_rn") == 1)
+                      .drop("_rn"))
+            entry = self._write(df, run_id,
+                                replaces=[s["snapshot_id"] for s in snaps])
+            check_owner()
+            self._commit(entry)
+            return entry
 
     def _validate_optimistic(self, expected_ids: set) -> None:
         """Optimistic-concurrency validation before a replace-commit
@@ -416,7 +410,7 @@ class SnapshotTable:
         source keys) union the non-delete source rows and replace all
         prior snapshots atomically — time travel still reads the
         pre-merge snapshots, and the commit serializes with
-        compactions through the same owner-token lock.
+        compactions through the same heartbeated owner-token lock.
 
         Concurrent ``append()`` (which by design never takes the
         compaction lock) is handled with Iceberg-style OPTIMISTIC
@@ -435,21 +429,19 @@ class SnapshotTable:
         Scale note: copy-on-write rewrites the table; a partitioned
         deployment rewrites only touched partitions — the anti-join +
         union plan is identical per partition."""
-        from pyspark.sql import functions as F
         dupes = (source.groupBy(key_col).count()
                  .filter(F.col("count") > 1).limit(1).count())
         if dupes:
             raise ValueError(
                 f"merge: source has duplicate {key_col} keys")
-        lock, token = self._acquire_compact_lock(stale_lock_s)
-        try:
+        if delete_col is not None:
+            inserts = (source.filter(
+                ~F.coalesce(F.col(delete_col), F.lit(False)))
+                .drop(delete_col))
+        else:
+            inserts = source
+        with self._compact_lock(stale_lock_s) as check_owner:
             cur = self.read_evolved(spark)
-            if delete_col is not None:
-                inserts = (source.filter(
-                    ~F.coalesce(F.col(delete_col), F.lit(False)))
-                    .drop(delete_col))
-            else:
-                inserts = source
             if cur is None:
                 out = inserts
                 replaced: list = []
@@ -458,34 +450,11 @@ class SnapshotTable:
                                 "left_anti")
                        .unionByName(inserts))
                 replaced = [s["snapshot_id"] for s in self.snapshots()]
-            new_schema = [(f.name, f.dataType.simpleString())
-                          for f in out.schema.fields]
-            self._check_evolution(self.table_schema(spark), new_schema)
-            snap_id = uuid.uuid4().hex
-            out_dir = os.path.join(self.root, f"snap-{snap_id}")
-            out.write.mode("error").parquet(out_dir)
-            files = sorted(
-                os.path.join(out_dir, f) for f in os.listdir(out_dir)
-                if f.endswith(".parquet"))
-            entry = {
-                "snapshot_id": snap_id,
-                "run_id": run_id,
-                "files": files,
-                "row_count": _footer_row_count(files),
-                "schema": [list(c) for c in new_schema],
-                "replaces": replaced,
-                "committed_at":
-                    datetime.now(timezone.utc).isoformat(),
-            }
-            if not self._owns_compact_lock(lock, token):
-                raise RuntimeError(
-                    "merge lost lock ownership before commit; aborting")
+            entry = self._write(out, run_id, replaces=replaced)
+            check_owner()
             self._validate_optimistic(set(replaced))
             self._commit(entry)
             return entry
-        finally:
-            if self._owns_compact_lock(lock, token):
-                os.unlink(lock)
 
     def vacuum(self) -> list:
         """Delete snap dirs no longer referenced by any live snapshot
@@ -524,21 +493,17 @@ class SnapshotTable:
         if (snapshot_id is None) == (as_of_ts is None):
             raise ValueError(
                 "time travel: pass exactly one of snapshot_id / as_of_ts")
-        live: dict = {}
-        found = False
-        for e in self._entries():
-            if as_of_ts is not None and e["committed_at"] > as_of_ts:
-                break
-            for rid in e.get("replaces", ()):
-                live.pop(rid, None)
-            live[e["snapshot_id"]] = e
-            if snapshot_id is not None and e["snapshot_id"] == snapshot_id:
-                found = True
-                break
-        if snapshot_id is not None and not found:
-            raise ValueError(
-                f"time travel: unknown snapshot_id {snapshot_id!r}")
-        return list(live.values())
+        entries = self._entries()
+        if snapshot_id is not None:
+            ids = [e["snapshot_id"] for e in entries]
+            if snapshot_id not in ids:
+                raise ValueError(
+                    f"time travel: unknown snapshot_id {snapshot_id!r}")
+            cut = ids.index(snapshot_id) + 1
+        else:
+            cut = next((i for i, e in enumerate(entries)
+                        if e["committed_at"] > as_of_ts), len(entries))
+        return self._replay(entries[:cut])
 
     def read_at(self, spark: SparkSession,
                 snapshot_id: str | None = None,
@@ -565,6 +530,59 @@ class SnapshotTable:
         df = self.read(spark)
         return None if df is None else df.select(key_col)
 
+    # -- stats pruning and incremental reads (r7) ----------------------
+    def _pruned_files(self, col: str, lo, hi) -> tuple:
+        """(surviving files, skipped count) for a [lo, hi] range
+        predicate on ``col`` using footer stats only — the manifest-level
+        file-skip every table format performs before any scan. Files
+        without stats survive (never skip blind)."""
+        keep = []
+        skipped = 0
+        for f in self.data_files():
+            rng = _footer_minmax(f, col)
+            if rng is None or (rng[1] >= lo and rng[0] <= hi):
+                keep.append(f)
+            else:
+                skipped += 1
+        return keep, skipped
+
+    def read_pruned(self, spark: SparkSession, col: str, lo, hi):
+        """Range read with manifest-stats file skipping (r7): only
+        files whose footer [min, max] intersects [lo, hi] are scanned;
+        the residual filter still applies (stats prune FILES, not
+        rows). Returns None for an empty table or fully-pruned range."""
+        files, _ = self._pruned_files(col, lo, hi)
+        if not files:
+            return None
+        return (spark.read.parquet(*files)
+                .filter((F.col(col) >= F.lit(lo))
+                        & (F.col(col) <= F.lit(hi))))
+
+    def read_changes(self, spark: SparkSession, since_snapshot_id: str):
+        """Incremental (CDC-style) read: the rows committed strictly
+        AFTER ``since_snapshot_id`` in manifest order (r7 — the
+        incremental-pipeline primitive: consumers checkpoint a snapshot
+        id and read only what landed since). Requires the post-anchor
+        history to be APPEND-ONLY — a replace commit (compaction/merge)
+        rewrites old rows and would make 'new rows since' ambiguous, so
+        it raises instead of silently double-counting. Returns None
+        when nothing landed since."""
+        entries = self._entries()
+        ids = [e["snapshot_id"] for e in entries]
+        if since_snapshot_id not in ids:
+            raise ValueError(
+                f"read_changes: unknown snapshot {since_snapshot_id!r}")
+        later = entries[ids.index(since_snapshot_id) + 1:]
+        if any(e.get("replaces") for e in later):
+            raise ValueError(
+                "read_changes: a replace commit (compaction/merge) exists "
+                "after the anchor snapshot; incremental semantics need an "
+                "append-only suffix — re-anchor past the replace")
+        files = [f for e in later for f in e["files"]]
+        if not files:
+            return None
+        return spark.read.parquet(*files)
+
 
 def _footer_minmax(path: str, col: str):
     """Column min/max from the parquet footer — metadata only, no
@@ -588,66 +606,3 @@ def _footer_minmax(path: str, col: str):
         lo = st.min if lo is None else min(lo, st.min)
         hi = st.max if hi is None else max(hi, st.max)
     return (lo, hi) if lo is not None else None
-
-
-def _pruned_files(self, col: str, lo, hi) -> tuple:
-    """(surviving files, skipped count) for a [lo, hi] range predicate
-    on ``col`` using footer stats only — the manifest-level file-skip
-    every table format performs before any scan. Files without stats
-    survive (never skip blind)."""
-    keep = []
-    skipped = 0
-    for f in self.data_files():
-        rng = _footer_minmax(f, col)
-        if rng is None or (rng[1] >= lo and rng[0] <= hi):
-            keep.append(f)
-        else:
-            skipped += 1
-    return keep, skipped
-
-
-def _read_pruned(self, spark: SparkSession, col: str, lo, hi):
-    """Range read with manifest-stats file skipping (r7): only files
-    whose footer [min, max] intersects [lo, hi] are scanned; the
-    residual filter still applies (stats prune FILES, not rows).
-    Returns None for an empty table or fully-pruned range."""
-    files, _ = self._pruned_files(col, lo, hi)
-    if not files:
-        return None
-    return (spark.read.parquet(*files)
-            .filter((F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))))
-
-
-def _read_changes(self, spark: SparkSession, since_snapshot_id: str):
-    """Incremental (CDC-style) read: the rows committed strictly
-    AFTER ``since_snapshot_id`` in manifest order (r7 — the
-    incremental-pipeline primitive: consumers checkpoint a snapshot
-    id and read only what landed since). Requires the post-anchor
-    history to be APPEND-ONLY — a replace commit (compaction/merge)
-    rewrites old rows and would make 'new rows since' ambiguous, so
-    it raises instead of silently double-counting. Returns None when
-    nothing landed since."""
-    entries = self._entries()
-    idx = None
-    for i, e in enumerate(entries):
-        if e["snapshot_id"] == since_snapshot_id:
-            idx = i
-            break
-    if idx is None:
-        raise ValueError(
-            f"read_changes: unknown snapshot {since_snapshot_id!r}")
-    later = entries[idx + 1:]
-    if any(e.get("replaces") for e in later):
-        raise ValueError(
-            "read_changes: a replace commit (compaction/merge) exists "
-            "after the anchor snapshot; incremental semantics need an "
-            "append-only suffix — re-anchor past the replace")
-    files = [f for e in later for f in e["files"]]
-    if not files:
-        return None
-    return spark.read.parquet(*files)
-
-
-SnapshotTable._pruned_files = _pruned_files
-SnapshotTable.read_pruned = _read_pruned
-SnapshotTable.read_changes = _read_changes

@@ -15,9 +15,9 @@ Scale shape: Common Crawl ships ~64k warc files per crawl at ~1 GiB
 each — FILE-level parallelism is the unit every production CC job uses
 (one task per .warc.gz, since gzip members don't expose offsets without
 an index). ``read_warc`` therefore maps one binaryFile row -> that
-file's records inside ``mapInPandas``; with tens of thousands of files
-per crawl this saturates any executor count long before per-file
-splitting would matter.
+file's records through the per-row ``map_rows`` seam (a 1:N map); with
+tens of thousands of files per crawl this saturates any executor count
+long before per-file splitting would matter.
 """
 
 from __future__ import annotations
@@ -28,6 +28,8 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from ..operators.extract import map_rows
 
 CRLF = "\r\n"
 _GZ_MAGIC = b"\x1f\x8b"
@@ -72,9 +74,12 @@ def build_warc(records, gzip_records: bool = True) -> bytes:
 # parsing (source)
 # ---------------------------------------------------------------------------
 
-def _gzip_members(data: bytes, chunk_size: int = 1 << 20) -> Iterator[bytes]:
-    """Iterate the concatenated gzip members of a .warc.gz — each
-    record is its own member, so this IS record splitting.
+def _gzip_member_spans(data: bytes,
+                       chunk_size: int = 1 << 20) -> Iterator[tuple]:
+    """Iterate the concatenated gzip members of a .warc.gz as
+    (offset, length, inflated bytes) — each record is its own member,
+    so this IS record splitting, and the spans are what a CDX indexer
+    records.
 
     ADVICE r3: tracks an OFFSET into one buffer and feeds the
     decompressor bounded ``chunk_size`` slices, so per-member input
@@ -96,9 +101,16 @@ def _gzip_members(data: bytes, chunk_size: int = 1 << 20) -> Iterator[bytes]:
             return                        # truncated/corrupt tail: stop
         if not d.eof:
             return                        # incomplete final member
-        yield bytes(out)
         # consumed = everything fed minus the final chunk's leftover
-        off = min(pos, n) - len(d.unused_data)
+        end = min(pos, n) - len(d.unused_data)
+        yield off, end - off, bytes(out)
+        off = end
+
+
+def _gzip_members(data: bytes, chunk_size: int = 1 << 20) -> Iterator[bytes]:
+    """The inflated gzip members of a .warc.gz, one per record."""
+    for _, _, member in _gzip_member_spans(data, chunk_size):
+        yield member
 
 
 def _parse_plain(data: bytes) -> Iterator[tuple]:
@@ -153,17 +165,14 @@ WARC_PAGE_SCHEMA = T.StructType([
 ])
 
 
-def _warc_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {"url": [], "warc_date": [], "html": []}
-        for content in pdf["content"]:
-            for headers, payload in iter_warc_records(bytes(content)):
-                if headers.get("warc-type", "response") != "response":
-                    continue              # warcinfo/request/metadata
-                out["url"].append(headers.get("warc-target-uri"))
-                out["warc_date"].append(headers.get("warc-date"))
-                out["html"].append(http_body(payload))
-        yield pd.DataFrame(out)
+def _warc_row(content: bytes) -> Iterator[tuple]:
+    """One WARC file -> a (url, warc_date, html) row per response
+    record."""
+    for headers, payload in iter_warc_records(content):
+        if headers.get("warc-type", "response") != "response":
+            continue                      # warcinfo/request/metadata
+        yield (headers.get("warc-target-uri"), headers.get("warc-date"),
+               http_body(payload))
 
 
 def read_warc(spark: SparkSession, path: str) -> DataFrame:
@@ -174,7 +183,7 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
              .option("pathGlobFilter", "*.warc*")
              .load(path)
              .select("content"))
-    return files.mapInPandas(_warc_batches, schema=WARC_PAGE_SCHEMA)
+    return map_rows(files, _warc_row, WARC_PAGE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -196,7 +205,7 @@ def write_documents_as_warc(docs: DataFrame, out_dir: str,
     os.makedirs(out_dir, exist_ok=True)
     ext = "warc.gz" if gzip_records else "warc"
 
-    def _write(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _write(key, pdf):
         from .. import corpus
         part = int(key[0])
         pdf = pdf.sort_values("doc_id")
@@ -246,17 +255,14 @@ WET_SCHEMA = T.StructType([
 ])
 
 
-def _wet_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {"url": [], "warc_date": [], "text": []}
-        for content in pdf["content"]:
-            for headers, payload in iter_warc_records(bytes(content)):
-                if headers.get("warc-type") != "conversion":
-                    continue              # warcinfo / anything else
-                out["url"].append(headers.get("warc-target-uri"))
-                out["warc_date"].append(headers.get("warc-date"))
-                out["text"].append(payload.decode("utf-8", "replace"))
-        yield pd.DataFrame(out)
+def _wet_row(content: bytes) -> Iterator[tuple]:
+    """One WET file -> a (url, warc_date, text) row per conversion
+    record."""
+    for headers, payload in iter_warc_records(content):
+        if headers.get("warc-type") != "conversion":
+            continue                      # warcinfo / anything else
+        yield (headers.get("warc-target-uri"), headers.get("warc-date"),
+               payload.decode("utf-8", "replace"))
 
 
 def read_wet(spark: SparkSession, path: str) -> DataFrame:
@@ -267,7 +273,7 @@ def read_wet(spark: SparkSession, path: str) -> DataFrame:
              .option("pathGlobFilter", "*.warc*")
              .load(path)
              .select("content"))
-    return files.mapInPandas(_wet_batches, schema=WET_SCHEMA)
+    return map_rows(files, _wet_row, WET_SCHEMA)
 
 
 def write_extracted_as_wet(extracted: DataFrame, out_dir: str,
@@ -286,7 +292,7 @@ def write_extracted_as_wet(extracted: DataFrame, out_dir: str,
     os.makedirs(out_dir, exist_ok=True)
     ext = "wet.warc.gz" if gzip_records else "wet.warc"
 
-    def _write(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _write(key, pdf):
         part = int(key[0])
         pdf = pdf.sort_values("url")
         recs = bytearray()
@@ -330,70 +336,34 @@ CDX_SCHEMA = T.StructType([
 ])
 
 
-def _gzip_member_spans(data: bytes,
-                       chunk_size: int = 1 << 20) -> Iterator[tuple]:
-    """Like ``_gzip_members`` but yields (offset, length, bytes) so an
-    indexer can record real spans. Same O(member + chunk) cost."""
-    view = memoryview(data)
-    off, n = 0, len(data)
-    while n - off >= 2 and bytes(view[off:off + 2]) == _GZ_MAGIC:
-        d = zlib.decompressobj(31)
-        out = bytearray()
-        pos = off
-        try:
-            while not d.eof and pos < n:
-                out += d.decompress(view[pos:pos + chunk_size])
-                pos += chunk_size
-        except zlib.error:
-            return
-        if not d.eof:
-            return
-        end = min(pos, n) - len(d.unused_data)
-        yield off, end - off, bytes(out)
-        off = end
-
-
 def index_warc_files(spark: SparkSession, path: str,
                      glob: str = "*.warc*") -> DataFrame:
     """Build CDX rows for every record in every (per-record-gzip)
     WARC/WET file under ``path``: SURT urlkey, record timestamp/URI/
     type, a sha256:16-hex payload digest, and the member's true
-    (offset, length) within the file. One mapInPandas pass,
+    (offset, length) within the file. One ``map_rows`` pass,
     file-per-task — the index build shuffles nothing."""
     import hashlib
     import os
 
     from ..operators.urltools import surt_key_py
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {f.name: [] for f in CDX_SCHEMA.fields}
-            for fpath, content in zip(pdf["path"].tolist(),
-                                      pdf["content"].tolist()):
-                name = os.path.basename(fpath)
-                raw = bytes(content)
-                if raw[:2] != _GZ_MAGIC:
-                    continue              # CDX spans need gzip members
-                for off, ln, member in _gzip_member_spans(raw):
-                    for headers, payload in _parse_plain(member):
-                        url = headers.get("warc-target-uri", "")
-                        out["urlkey"].append(surt_key_py(url))
-                        out["rec_ts"].append(headers.get("warc-date", ""))
-                        out["url"].append(url)
-                        out["rec_type"].append(
-                            headers.get("warc-type", ""))
-                        out["digest"].append(
-                            "sha256:" + hashlib.sha256(payload)
-                            .hexdigest()[:16])
-                        out["offset"].append(off)
-                        out["length"].append(ln)
-                        out["filename"].append(name)
-            yield pd.DataFrame(out)
+    def _row(fpath, content):
+        if content[:2] != _GZ_MAGIC:
+            return                        # CDX spans need gzip members
+        name = os.path.basename(fpath)
+        for off, ln, member in _gzip_member_spans(content):
+            for headers, payload in _parse_plain(member):
+                url = headers.get("warc-target-uri", "")
+                yield (surt_key_py(url), headers.get("warc-date", ""), url,
+                       headers.get("warc-type", ""),
+                       "sha256:" + hashlib.sha256(payload).hexdigest()[:16],
+                       off, ln, name)
 
     files = (spark.read.format("binaryFile")
              .option("pathGlobFilter", glob).load(path)
              .select("path", "content"))
-    return files.mapInPandas(_batches, schema=CDX_SCHEMA)
+    return map_rows(files, _row, CDX_SCHEMA)
 
 
 def write_cdx(idx: DataFrame, out_dir: str, n_files: int = 4) -> None:

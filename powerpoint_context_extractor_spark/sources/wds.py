@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import portable_hash
+from ..operators.extract import map_rows
 
 
 def write_wds_shards(df: DataFrame, out_dir: str, n_shards: int = 4,
@@ -84,29 +85,20 @@ def write_wds_shards(df: DataFrame, out_dir: str, n_shards: int = 4,
 
 def read_wds_shards(spark: SparkSession, path: str) -> DataFrame:
     """Read shards back as (doc_id, text, shard) — one task per shard
-    file, members parsed with stdlib tarfile inside Arrow batches."""
+    file, members parsed with stdlib tarfile through ``map_rows``."""
     shards = sorted(f for f in os.listdir(path) if f.endswith(".tar"))
     if not shards:
         raise ValueError(f"read_wds_shards: no .tar shards in {path}")
-    import pandas as pd
     files = spark.createDataFrame(
         [(os.path.join(path, f),) for f in shards], "file string") \
         .repartition(len(shards), "file")
 
-    def _read(batches):
-        for pdf in batches:
-            for fp in pdf["file"].tolist():
-                out = {"doc_id": [], "text": [], "shard": []}
-                sid = int(os.path.basename(fp)[6:11])
-                with tarfile.open(fp, "r") as tf:
-                    for m in tf:
-                        if not m.isfile() or not m.name.endswith(".txt"):
-                            continue
-                        out["doc_id"].append(int(m.name[:-4]))
-                        out["text"].append(
-                            tf.extractfile(m).read().decode("utf-8"))
-                        out["shard"].append(sid)
-                yield pd.DataFrame(out)
+    def _row(file):
+        sid = int(os.path.basename(file)[6:11])
+        with tarfile.open(file, "r") as tf:
+            for m in tf:
+                if m.isfile() and m.name.endswith(".txt"):
+                    yield (int(m.name[:-4]),
+                           tf.extractfile(m).read().decode("utf-8"), sid)
 
-    return files.mapInPandas(
-        _read, schema="doc_id long, text string, shard long")
+    return map_rows(files, _row, "doc_id long, text string, shard long")

@@ -285,34 +285,41 @@ def test_compaction_lock_excludes_concurrent_compactors(spark, tmp_path):
 
 
 def test_compaction_heartbeat_keeps_long_run_lock_fresh(spark, tmp_path):
-    """r4 ADVICE #1: a LIVE compaction running longer than stale_lock_s
-    must not have its lock broken as 'stale' — the heartbeat refreshes
-    the lock mtime, so a second compactor still raises."""
+    """r4 ADVICE #1: a LIVE compaction (or merge — both hold the same
+    lock) running longer than stale_lock_s must not have its lock
+    broken as 'stale' — the heartbeat refreshes the lock mtime, so a
+    second compactor still raises."""
     import time
 
     import pytest as _pytest
 
     from powerpoint_context_extractor_spark.sources import table_io
-    table = table_io.SnapshotTable(str(tmp_path / "t"))
-    table.append(spark.range(3).selectExpr("id AS user_id"), run_id="a")
-
     stale_s = 0.4
-    orig = table_io.SnapshotTable._compact_locked
+    orig = table_io.SnapshotTable._write
+    ops = {   # name -> (replace commit, rows after it)
+        "compact": (lambda t: t.compact(spark, stale_lock_s=stale_s), 3),
+        "merge": (lambda t: t.merge(
+            spark, spark.range(1, 4).selectExpr("id AS user_id"),
+            "user_id", stale_lock_s=stale_s), 4),
+    }
+    for name, (op, n_rows) in ops.items():
+        table = table_io.SnapshotTable(str(tmp_path / name))
+        table.append(spark.range(3).selectExpr("id AS user_id"), run_id="a")
 
-    def slow_compact(self, *a, **kw):
-        time.sleep(3 * stale_s)            # outlive stale_lock_s
-        # mid-run, a would-be takeover must see a FRESH lock and raise
-        with _pytest.raises(RuntimeError, match="concurrent compaction"):
-            table._acquire_compact_lock(stale_lock_s=stale_s)
-        return orig(self, *a, **kw)
+        def slow_write(self, *a, **kw):
+            time.sleep(3 * stale_s)            # outlive stale_lock_s
+            # mid-run, a would-be takeover must see a FRESH lock and raise
+            with _pytest.raises(RuntimeError, match="concurrent compaction"):
+                table._acquire_compact_lock(stale_lock_s=stale_s)
+            return orig(self, *a, **kw)
 
-    try:
-        table_io.SnapshotTable._compact_locked = slow_compact
-        entry = table.compact(spark, stale_lock_s=stale_s)
-    finally:
-        table_io.SnapshotTable._compact_locked = orig
-    assert entry is not None
-    assert table.read(spark).count() == 3
+        try:
+            table_io.SnapshotTable._write = slow_write
+            entry = op(table)
+        finally:
+            table_io.SnapshotTable._write = orig
+        assert entry is not None, name
+        assert table.read(spark).count() == n_rows, name
 
 
 def test_compaction_aborts_commit_after_lock_ownership_loss(spark, tmp_path):
@@ -377,23 +384,6 @@ def test_manifest_tolerates_torn_trailing_line(spark, tmp_path):
         table.snapshots()
 
 
-def test_manifest_legacy_migration(tmp_path):
-    import json
-    from powerpoint_context_extractor_spark.sources.table_io import (
-        SnapshotTable,
-    )
-    root = str(tmp_path / "t2")
-    table = SnapshotTable(root)
-    legacy = {"snapshots": [{"snapshot_id": "old", "run_id": "r",
-                             "files": [], "row_count": 1,
-                             "committed_at": "then"}]}
-    with open(table._legacy_manifest_path, "w", encoding="utf-8") as f:
-        json.dump(legacy, f)
-    table._commit({"snapshot_id": "new", "run_id": "r", "files": [],
-                   "row_count": 2, "committed_at": "now"})
-    assert [s["snapshot_id"] for s in table.snapshots()] == ["old", "new"]
-
-
 def test_repetition_stats_is_shuffle_free(spark, sf):
     """The Gopher repetition filter must run at scan speed: per-row
     array math only, no Exchange anywhere in the plan."""
@@ -436,15 +426,14 @@ def test_paragraph_dedup_shuffles_hash_keys_not_bodies(spark, sf):
     assert "CartesianProduct" not in plan and "ph" in plan
 
 
-def test_schema_evolution_add_widen_reject_and_legacy(spark, tmp_path):
+def test_schema_evolution_add_widen_reject(spark, tmp_path):
     """r6: evolved reads project old snapshots to the latest schema
     (typed NULLs for added columns, casts for widened ones);
-    incompatible type changes are rejected at append; pre-r6 manifest
-    entries without a recorded schema fall back to the parquet footer;
-    compaction across schema versions preserves the evolved shape."""
+    incompatible type changes are rejected at append; compaction
+    across schema versions preserves the evolved shape. Every commit
+    kind records its schema in the manifest (evolved reads have no
+    footer fallback), and only replace commits carry ``replaces``."""
     import json as _json
-
-    from pyspark.sql import functions as F
 
     from powerpoint_context_extractor_spark.sources.table_io import (
         MANIFEST, SnapshotTable,
@@ -467,21 +456,29 @@ def test_schema_evolution_add_widen_reject_and_legacy(spark, tmp_path):
     with _pytest.raises(ValueError, match="cannot change"):
         table.append(spark.createDataFrame([(9, 1)], "id long, s int"),
                      "bad")
-    # legacy manifest lines (no recorded schema) derive from footers
-    mf = tmp_path / "t" / MANIFEST
-    lines = [_json.loads(x) for x in mf.read_text().splitlines()]
-    for e in lines:
-        e.pop("schema")
-    mf.write_text("".join(_json.dumps(e) + "\n" for e in lines))
-    got2 = {r["id"]: (r["s"], r["extra"])
-            for r in table.read_evolved(spark).collect()}
-    assert got2 == got
     # compaction over mixed schemas keeps the evolved projection
     table.compact(spark, run_id="c")
     got3 = {r["id"]: (r["s"], r["extra"])
             for r in table.read_evolved(spark).collect()}
     assert got3 == got
     assert [s.get("run_id") for s in table.snapshots()] == ["c"]
+    # a merge is the other replace commit
+    table.merge(spark, spark.createDataFrame(
+        [(4, "d", 40)], "id long, s string, extra long"), "id", run_id="m")
+    # manifest entry shape, per commit kind
+    mf = tmp_path / "t" / MANIFEST
+    entries = [_json.loads(x) for x in mf.read_text().splitlines()]
+    assert [e["run_id"] for e in entries] == ["v1", "v2", "c", "m"]
+    base = {"snapshot_id", "run_id", "files", "row_count", "schema",
+            "committed_at"}
+    for e in entries:
+        replace = e["run_id"] in ("c", "m")
+        assert set(e) == base | ({"replaces"} if replace else set()), e
+    assert entries[2]["replaces"] == [e["snapshot_id"] for e in entries[:2]]
+    assert entries[3]["replaces"] == [entries[2]["snapshot_id"]]
+    assert entries[3]["schema"] == [
+        ["id", "bigint"], ["s", "string"], ["extra", "bigint"]]
+    assert [e["row_count"] for e in entries] == [2, 1, 3, 4]
 
 
 def test_zorder_layout_bounds_both_dimensions(spark, tmp_path):

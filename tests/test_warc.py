@@ -4,7 +4,13 @@ the flagship extraction path."""
 
 import os
 
+import pytest
+
 from powerpoint_context_extractor_spark.sources import warc
+
+# the WARC/WET writers hand applyInPandas an unannotated function: a
+# partial type hint makes Spark warn that it cannot infer the eval type
+pytestmark = pytest.mark.filterwarnings("error::UserWarning")
 
 
 def test_warc_roundtrip_plain_and_gz():
