@@ -1,4 +1,4 @@
-"""Pure-stdlib baseline-JPEG subset codec (no Spark imports).
+"""Pure-stdlib JPEG subset codec (no Spark imports).
 
 Closes the last multimodal honest-error gap (r4 VERDICT missing #2):
 jpeg payloads previously raised an explicit ``unsupported`` error
@@ -18,13 +18,17 @@ half-away-from-zero rounding; documented below) so constant-MCU
 fixtures decode as a pure integer function of the input that a SQL
 oracle reproduces.
 
-Subset (documented, raises ValueError outside it): baseline DCT
-(SOF0), 8-bit, 1 component (any sampling) or 3 components at
-4:2:0 (2x2,1x1,1x1), no restart markers, gray dims multiples of 8 /
-color dims multiples of 16 on the WRITER (the reader handles any
-full-MCU dims). Quantization uses the spec's example luminance table
-for all components (legal per T.81 — table ids are per-component),
-FROZEN so fixture decodes stay integer-exact.
+Subset (documented, raises ValueError outside it): baseline (SOF0,
+with DRI/RSTm restart intervals) and progressive (SOF2: spectral
+selection and successive approximation, no restart intervals) DCT,
+8-bit, 1 component (any sampling) or 3 components at 4:2:0
+(2x2,1x1,1x1). The component layout is decided once (``_layout`` on
+the reader, ``_components`` on the writer); every encoder and decoder
+then walks the components generically, so gray and color share one
+code path. Gray dims must be multiples of 8 and color dims multiples
+of 16 on both sides. Quantization uses the spec's example luminance
+table for all components (legal per T.81 — table ids are
+per-component), FROZEN so fixture decodes stay integer-exact.
 Reference analog: the slide raster path at
 `pptx_extractor/slides/extractor.py:165-293`.
 """
@@ -35,7 +39,8 @@ import math
 import struct
 
 __all__ = ["render_jpeg_gray", "decode_jpeg_gray", "render_jpeg_color",
-           "render_jpeg_gray_progressive", "decode_jpeg", "QTABLE",
+           "render_jpeg_gray_progressive", "render_jpeg_gray_progressive_sa",
+           "render_jpeg_color_progressive", "decode_jpeg", "QTABLE",
            "ycbcr_from_rgb", "rgb_from_ycbcr"]
 
 # ITU T.81 Annex K.1 example luminance quantization table (row-major)
@@ -117,30 +122,12 @@ _COS = [[math.cos((2 * x + 1) * u * math.pi / 16) for u in range(8)]
 # sparse IDCT fast path in _dequant_idct (r8)
 _COS_BY_U = [[_COS[y][u] for y in range(8)] for u in range(8)]
 _INV_SQRT2 = 1 / math.sqrt(2)
-
-
-def _build_codes(bits: list, vals: list) -> dict:
-    """value -> (code, length) per T.81 C.2 canonical assignment."""
-    codes = {}
-    code = 0
-    k = 0
-    for ln in range(1, 17):
-        for _ in range(bits[ln - 1]):
-            codes[vals[k]] = (code, ln)
-            code += 1
-            k += 1
-        code <<= 1
-    return codes
-
-
-_DC_CODES = _build_codes(_DC_BITS, _DC_VALS)
-_AC_CODES = _build_codes(_AC_BITS, _AC_VALS)
-_DC_CODES_C = _build_codes(_DC_BITS_C, _DC_VALS_C)
-_AC_CODES_C = _build_codes(_AC_BITS_C, _AC_VALS_C)
+# the DQT body every writer emits: QTABLE in zig-zag order
+_QTABLE_ZZ = bytes(QTABLE[_ZIGZAG[k]] for k in range(64))
 
 
 def _build_decoder(bits: list, vals: list) -> dict:
-    """(length, code) -> value lookup for the reader."""
+    """(length, code) -> value per T.81 C.2 canonical assignment."""
     out = {}
     code = 0
     k = 0
@@ -153,8 +140,28 @@ def _build_decoder(bits: list, vals: list) -> dict:
     return out
 
 
-_DC_DECODE = _build_decoder(_DC_BITS, _DC_VALS)
-_AC_DECODE = _build_decoder(_AC_BITS, _AC_VALS)
+def _build_codes(bits: list, vals: list) -> dict:
+    """value -> (code, length) for the writer."""
+    return {v: (code, ln)
+            for (ln, code), v in _build_decoder(bits, vals).items()}
+
+
+# Annex K tables by huffman table id: 0 = luminance (component 0),
+# 1 = chrominance (every later component)
+_DC_HUFF = ((_DC_BITS, _DC_VALS), (_DC_BITS_C, _DC_VALS_C))
+_AC_HUFF = ((_AC_BITS, _AC_VALS), (_AC_BITS_C, _AC_VALS_C))
+_DC_CODES = [_build_codes(*t) for t in _DC_HUFF]
+_AC_CODES = [_build_codes(*t) for t in _AC_HUFF]
+
+# Progressive AC scans emit EOBn symbols (0x10..0xE0 with SSSS=0) the
+# sequential Annex-K table has no codes for, so the progressive AC
+# scan ships its OWN stream-defined table: 255 symbols, all length 8
+# (canonical; code 0xFF stays unused as the spec's all-ones reserve).
+# Wasteful per byte, trivially correct — the decoder honors whatever
+# DHT the stream carries.
+_AC_PROG_BITS = [0, 0, 0, 0, 0, 0, 0, 255, 0, 0, 0, 0, 0, 0, 0, 0]
+_AC_PROG_VALS = list(range(255))
+_AC_PROG_CODES = _build_codes(_AC_PROG_BITS, _AC_PROG_VALS)
 
 
 def _rnd10k(n: int) -> int:
@@ -384,35 +391,239 @@ def _seg(marker: int, body: bytes) -> bytes:
     return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
 
 
-def _encode_block(w: "_BitWriter", block: list, prev_dc: int,
-                  dc_codes: dict, ac_codes: dict) -> int:
-    """FDCT+quantize ``block`` and entropy-code it against ``prev_dc``;
-    returns the new DC predictor."""
-    zz = _fdct_quant(block)
-    diff = zz[0] - prev_dc
+def _mcu_block_idx(nbx: int, hh: int, vv: int, mx: int, my: int,
+                   j: int) -> int:
+    """Raster index of MCU (mx, my)'s j-th block in a component whose
+    grid is nbx blocks wide (T.81 A.2.3 left-to-right, top-to-bottom
+    within the MCU)."""
+    return (my * vv + j // hh) * nbx + mx * hh + j % hh
+
+
+# ---------------------------------------------------------------------------
+# writer: one component walk behind every renderer
+# ---------------------------------------------------------------------------
+
+
+def _components(width: int, height: int, data: bytes,
+                color: bool) -> list:
+    """Check the input and build one (sampling, zig-zag block grid) per
+    component: a single gray plane, or Y at 2x2 plus Cb and Cr at 1x1.
+    Color conversion and the 2x2 chroma average use the FROZEN integer
+    rules (``ycbcr_from_rgb``; subsample rounding is (sum + 2) // 4),
+    so constant-MCU fixtures stay oracle-exact."""
+    if color:
+        if width % 16 or height % 16 or width <= 0 or height <= 0:
+            raise ValueError(
+                "jpeg: color dims must be positive multiples of 16")
+        if len(data) != width * height * 3:
+            raise ValueError("jpeg: rgb length != width*height*3")
+        ycc = [ycbcr_from_rgb(*data[3 * i:3 * i + 3])
+               for i in range(width * height)]
+        planes = [(2, [p[0] for p in ycc], width, height)]
+        for c in (1, 2):
+            planes.append((1, [
+                (ycc[a][c] + ycc[a + 1][c] + ycc[a + width][c]
+                 + ycc[a + width + 1][c] + 2) // 4
+                for y in range(0, height, 2)
+                for a in range(y * width, (y + 1) * width, 2)],
+                width // 2, height // 2))
+    else:
+        if width % 8 or height % 8 or width <= 0 or height <= 0:
+            raise ValueError(
+                "jpeg: dimensions must be positive multiples of 8")
+        if len(data) != width * height:
+            raise ValueError("jpeg: pixels length != width*height")
+        planes = [(1, data, width, height)]
+    return [(s, [_fdct_quant([plane[(by * 8 + y) * pw + bx * 8 + x]
+                              for y in range(8) for x in range(8)])
+                 for by in range(ph // 8) for bx in range(pw // 8)])
+            for s, plane, pw, ph in planes]
+
+
+def _mcus(comps: list, width: int, height: int) -> list:
+    """Each MCU's blocks as (component index, zz) in T.81 A.2.3 order —
+    one block per MCU for gray, Y Y Y Y Cb Cr for 4:2:0."""
+    mcux, mcuy = width // (8 * comps[0][0]), height // (8 * comps[0][0])
+    return [[(ci, zzs[_mcu_block_idx(mcux * s, s, s, mx, my, j)])
+             for ci, (s, zzs) in enumerate(comps) for j in range(s * s)]
+            for my in range(mcuy) for mx in range(mcux)]
+
+
+def _dht(tables: list) -> bytes:
+    """One DHT segment per (Tc<<4|Th, bits, vals)."""
+    return b"".join(_seg(0xC4, bytes([tc_th]) + bytes(bits) + bytes(vals))
+                    for tc_th, bits, vals in tables)
+
+
+# DHT bytes by the number of table ids in use (1 = gray, 2 = color):
+# baseline sends DC and AC per id, progressive the DC tables and the
+# one stream-defined AC table
+_DHT_BASELINE = {n: _dht([(tc << 4 | t, *huff[t]) for t in range(n)
+                          for tc, huff in ((0, _DC_HUFF), (1, _AC_HUFF))])
+                 for n in (1, 2)}
+_DHT_PROGRESSIVE = {n: _dht([(t, *_DC_HUFF[t]) for t in range(n)]
+                            + [(0x10, _AC_PROG_BITS, _AC_PROG_VALS)])
+                    for n in (1, 2)}
+
+
+def _head(sof: int, width: int, height: int, comps: list,
+          dht: bytes) -> bytearray:
+    """SOI, APP0, DQT (one shared table, id 0), SOFn with each
+    component's sampling, then the DHT segments."""
+    out = bytearray(b"\xff\xd8")                       # SOI
+    out += _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
+    out += _seg(0xDB, b"\x00" + _QTABLE_ZZ)            # DQT id 0
+    out += _seg(sof, struct.pack(">BHHB", 8, height, width, len(comps))
+                + b"".join(bytes([ci + 1, s * 0x11, 0])
+                           for ci, (s, _) in enumerate(comps)))
+    return out + dht
+
+
+def _sos(sel: list, ss: int, se: int, ahal: int) -> bytes:
+    """SOS header over (component index, Td<<4|Ta) pairs."""
+    return _seg(0xDA, bytes([len(sel)])
+                + b"".join(bytes([ci + 1, tdta]) for ci, tdta in sel)
+                + bytes([ss, se, ahal]))
+
+
+def _put_dc(w: "_BitWriter", diff: int, codes: dict) -> None:
     size, mag = _magnitude(diff)
-    code, ln = dc_codes[size]
+    code, ln = codes[size]
     w.put(code, ln)
     if size:
         w.put(mag, size)
+
+
+def _last_nonzero_ac(zz: list) -> int:
+    for k in range(63, 0, -1):
+        if zz[k]:
+            return k
+    return 0
+
+
+def _put_ac(w: "_BitWriter", zz: list, last: int, codes: dict) -> None:
+    """Run/size symbols (with ZRLs) for zz[1..last]."""
     run = 0
-    for k in range(1, 64):
+    for k in range(1, last + 1):
         if zz[k] == 0:
             run += 1
             continue
         while run > 15:
-            zc, zl = ac_codes[0xF0]                    # ZRL
-            w.put(zc, zl)
+            code, ln = codes[0xF0]                     # ZRL
+            w.put(code, ln)
             run -= 16
-        asize, amag = _magnitude(zz[k])
-        ac, al = ac_codes[(run << 4) | asize]
-        w.put(ac, al)
-        w.put(amag, asize)
+        size, mag = _magnitude(zz[k])
+        code, ln = codes[(run << 4) | size]
+        w.put(code, ln)
+        w.put(mag, size)
         run = 0
-    if run:
-        ec, el = ac_codes[0x00]                        # EOB
-        w.put(ec, el)
-    return zz[0]
+
+
+def _encode_zz(w: "_BitWriter", zz: list, prev_dc: int,
+               dc_codes: dict, ac_codes: dict) -> None:
+    """Entropy-code one sequential block against ``prev_dc``."""
+    _put_dc(w, zz[0] - prev_dc, dc_codes)
+    last = _last_nonzero_ac(zz)
+    _put_ac(w, zz, last, ac_codes)
+    if last < 63:
+        code, ln = ac_codes[0x00]                      # EOB
+        w.put(code, ln)
+
+
+def _baseline(width: int, height: int, comps: list,
+              restart_interval: int) -> bytes:
+    """SOF0 stream: one MCU-interleaved scan over every component;
+    ``restart_interval`` > 0 adds DRI and an RSTm marker (byte-aligned,
+    DC predictors reset) every that many MCUs."""
+    out = _head(0xC0, width, height, comps,
+                _DHT_BASELINE[min(len(comps), 2)])
+    if restart_interval:
+        out += _seg(0xDD, struct.pack(">H", restart_interval))
+    out += _sos([(ci, 0x11 * min(ci, 1)) for ci in range(len(comps))],
+                0, 63, 0)
+    mcus = _mcus(comps, width, height)
+    w = _BitWriter()
+    pred = [0] * len(comps)
+    rst = 0
+    for m, mcu in enumerate(mcus, 1):
+        for ci, zz in mcu:
+            t = min(ci, 1)
+            _encode_zz(w, zz, pred[ci], _DC_CODES[t], _AC_CODES[t])
+            pred[ci] = zz[0]
+        if restart_interval and m % restart_interval == 0 \
+                and m < len(mcus):
+            out += w.flush() + bytes([0xFF, 0xD0 + rst])
+            rst = (rst + 1) % 8
+            w = _BitWriter()
+            pred = [0] * len(comps)
+    out += w.flush()
+    out += b"\xff\xd9"                                 # EOI
+    return bytes(out)
+
+
+def _dc_first_scan(mcus: list, al: int) -> bytes:
+    """Entropy body of a first-pass DC scan over every component:
+    MCU-interleaved DPCM (one predictor per component) of the
+    point-transformed value ``dc >> al`` (T.81 G.1.2.1)."""
+    w = _BitWriter()
+    pred = [0, 0, 0]                     # one per component
+    for mcu in mcus:
+        for ci, zz in mcu:
+            v = zz[0] >> al
+            _put_dc(w, v - pred[ci], _DC_CODES[min(ci, 1)])
+            pred[ci] = v
+    return w.flush()
+
+
+def _write_first_ac_scan(zzs: list) -> bytes:
+    """Entropy body of a first-pass AC band-1..63 scan over one
+    component's blocks in raster order, EOB runs batched across blocks
+    (stream-defined 255-symbol table, ``_AC_PROG_CODES``)."""
+    w = _BitWriter()
+    eobrun = 0
+
+    def _flush_eob() -> None:
+        nonlocal eobrun
+        while eobrun:
+            chunk = min(eobrun, 32767)
+            rr = chunk.bit_length() - 1
+            code, ln = _AC_PROG_CODES[rr << 4]
+            w.put(code, ln)
+            if rr:
+                w.put(chunk - (1 << rr), rr)
+            eobrun -= chunk
+
+    for zz in zzs:
+        last = _last_nonzero_ac(zz)
+        if last == 0:
+            eobrun += 1
+            continue
+        _flush_eob()
+        _put_ac(w, zz, last, _AC_PROG_CODES)
+        if last < 63:
+            eobrun += 1
+    _flush_eob()
+    return w.flush()
+
+
+def _progressive(width: int, height: int, comps: list,
+                 al: int) -> bytearray:
+    """SOF2 head plus the first passes at point transform ``al``: one
+    MCU-interleaved DC scan, then one AC band-1..63 scan per component
+    (T.81 requires non-interleaved progressive AC). AC values are
+    magnitude-shifted by ``al`` (toward zero, T.81 G.1.2.2)."""
+    out = _head(0xC2, width, height, comps,
+                _DHT_PROGRESSIVE[min(len(comps), 2)])
+    out += _sos([(ci, 0x10 * min(ci, 1)) for ci in range(len(comps))],
+                0, 0, al)
+    out += _dc_first_scan(_mcus(comps, width, height), al)
+    for ci, (_, zzs) in enumerate(comps):
+        if al:
+            zzs = [[-((-v) >> al) if v < 0 else v >> al for v in zz]
+                   for zz in zzs]
+        out += _sos([(ci, 0)], 1, 63, al)
+        out += _write_first_ac_scan(zzs)
+    return out
 
 
 def render_jpeg_gray(width: int, height: int, pixels: bytes,
@@ -422,110 +633,142 @@ def render_jpeg_gray(width: int, height: int, pixels: bytes,
     ``restart_interval`` > 0 emits a DRI segment and RSTm markers
     every that many MCUs (byte-aligned, DC predictor reset) — the
     common web shape that enables parallel/resilient decode."""
-    if width % 8 or height % 8 or width <= 0 or height <= 0:
-        raise ValueError("jpeg: dimensions must be positive multiples of 8")
-    if len(pixels) != width * height:
-        raise ValueError("jpeg: pixels length != width*height")
-    out = bytearray(b"\xff\xd8")                       # SOI
-    out += _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    zz_q = bytes(QTABLE[_ZIGZAG[k]] for k in range(64))
-    out += _seg(0xDB, b"\x00" + zz_q)                  # DQT id 0
-    out += _seg(0xC0, struct.pack(">BHHB", 8, height, width, 1)
-                + b"\x01\x11\x00")                     # SOF0, 1 comp
-    out += _seg(0xC4, b"\x00" + bytes(_DC_BITS) + bytes(_DC_VALS))
-    out += _seg(0xC4, b"\x10" + bytes(_AC_BITS) + bytes(_AC_VALS))
-    if restart_interval:
-        out += _seg(0xDD, struct.pack(">H", restart_interval))
-    out += _seg(0xDA, b"\x01\x01\x00\x00\x3f\x00")     # SOS
-    w = _BitWriter()
-    prev_dc = 0
-    nb = (width // 8) * (height // 8)
-    mcu = rst = 0
-    for by in range(height // 8):
-        for bx in range(width // 8):
-            block = [pixels[(by * 8 + y) * width + bx * 8 + x]
-                     for y in range(8) for x in range(8)]
-            prev_dc = _encode_block(w, block, prev_dc,
-                                    _DC_CODES, _AC_CODES)
-            mcu += 1
-            if restart_interval and mcu % restart_interval == 0 \
-                    and mcu < nb:
-                out += w.flush() + bytes([0xFF, 0xD0 + rst])
-                rst = (rst + 1) % 8
-                w = _BitWriter()
-                prev_dc = 0
-    out += w.flush()
-    out += b"\xff\xd9"                                 # EOI
-    return bytes(out)
+    return _baseline(width, height,
+                     _components(width, height, pixels, color=False),
+                     restart_interval)
 
 
 def render_jpeg_color(width: int, height: int, rgb: bytes,
                       restart_interval: int = 0) -> bytes:
     """Encode row-major RGB bytes as baseline YCbCr 4:2:0 JFIF (r6).
     Dimensions must be multiples of 16 (full 4:2:0 MCUs only in the
-    subset). Color conversion and the 2x2 chroma average use the
-    FROZEN integer rules (``ycbcr_from_rgb``; subsample rounding is
-    (sum + 2) // 4), so constant-MCU fixtures stay oracle-exact."""
-    if width % 16 or height % 16 or width <= 0 or height <= 0:
-        raise ValueError("jpeg: color dims must be positive multiples of 16")
-    if len(rgb) != width * height * 3:
-        raise ValueError("jpeg: rgb length != width*height*3")
-    n = width * height
-    ys, cbs, crs = [0] * n, [0] * n, [0] * n
-    for i in range(n):
-        ys[i], cbs[i], crs[i] = ycbcr_from_rgb(
-            rgb[3 * i], rgb[3 * i + 1], rgb[3 * i + 2])
-    cw, ch = width // 2, height // 2
-    cb_s, cr_s = [0] * (cw * ch), [0] * (cw * ch)
-    for y in range(ch):
-        for x in range(cw):
-            idx = [(2 * y + dy) * width + 2 * x + dx
-                   for dy in (0, 1) for dx in (0, 1)]
-            cb_s[y * cw + x] = (sum(cbs[i] for i in idx) + 2) // 4
-            cr_s[y * cw + x] = (sum(crs[i] for i in idx) + 2) // 4
-    out = bytearray(b"\xff\xd8")                       # SOI
-    out += _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    zz_q = bytes(QTABLE[_ZIGZAG[k]] for k in range(64))
-    out += _seg(0xDB, b"\x00" + zz_q)                  # DQT id 0 (shared)
-    out += _seg(0xC0, struct.pack(">BHHB", 8, height, width, 3)
-                + b"\x01\x22\x00"                      # Y  2x2, qtab 0
-                + b"\x02\x11\x00"                      # Cb 1x1, qtab 0
-                + b"\x03\x11\x00")                     # Cr 1x1, qtab 0
-    out += _seg(0xC4, b"\x00" + bytes(_DC_BITS) + bytes(_DC_VALS))
-    out += _seg(0xC4, b"\x10" + bytes(_AC_BITS) + bytes(_AC_VALS))
-    out += _seg(0xC4, b"\x01" + bytes(_DC_BITS_C) + bytes(_DC_VALS_C))
-    out += _seg(0xC4, b"\x11" + bytes(_AC_BITS_C) + bytes(_AC_VALS_C))
-    if restart_interval:
-        out += _seg(0xDD, struct.pack(">H", restart_interval))
-    out += _seg(0xDA, b"\x03\x01\x00\x02\x11\x03\x11\x00\x3f\x00")
+    subset); see ``_components`` for the frozen color rules."""
+    return _baseline(width, height,
+                     _components(width, height, rgb, color=True),
+                     restart_interval)
+
+
+def render_jpeg_gray_progressive(width: int, height: int,
+                                 pixels: bytes) -> bytes:
+    """Encode row-major grayscale bytes as a PROGRESSIVE (SOF2) JFIF
+    using spectral selection only (T.81 G.1: scan 1 = the DC band,
+    scan 2 = the full AC band 1..63 with EOB-run batching, both with
+    Ah=Al=0). Same frozen coefficient math as the baseline encoder —
+    a block-constant fixture decodes to the identical integer pixels,
+    which is what lets the progressive query share the baseline
+    oracle."""
+    comps = _components(width, height, pixels, color=False)
+    return bytes(_progressive(width, height, comps, 0) + b"\xff\xd9")
+
+
+def render_jpeg_color_progressive(width: int, height: int,
+                                  rgb: bytes) -> bytes:
+    """Encode row-major RGB bytes as a PROGRESSIVE (SOF2) YCbCr 4:2:0
+    JFIF: one MCU-interleaved DC scan (per-component DPCM, Annex K DC
+    tables), then one non-interleaved AC band-1..63 scan per
+    component (T.81 G.1; spectral selection, Ah=Al=0). Same frozen
+    color conversion / subsample / coefficient math as the baseline
+    color encoder, so any image decodes to the identical RGB bytes."""
+    comps = _components(width, height, rgb, color=True)
+    return bytes(_progressive(width, height, comps, 0) + b"\xff\xd9")
+
+
+def render_jpeg_gray_progressive_sa(width: int, height: int,
+                                    pixels: bytes) -> bytes:
+    """Encode grayscale bytes as a PROGRESSIVE (SOF2) JFIF using BOTH
+    progressive dimensions (T.81 G.1): spectral selection AND
+    successive approximation. Four scans — DC first at Al=1 (DPCM of
+    the arithmetic-shifted value), AC band 1..63 first at Al=1
+    (magnitude-shifted, EOB-run batching), DC refinement (one raw bit
+    per block), AC refinement (G.1.2.3: newly-significant coefficients
+    at size 1 with a sign bit, correction bits for history-nonzero
+    coefficients buffered and flushed after the covering symbol).
+    The two passes reassemble every coefficient exactly — (v>>1)<<1
+    plus the refinement bit is v for DC, and +-((|v|>>1)<<1 + bit) for
+    AC — so a fixture decodes to the identical integer pixels as the
+    baseline encoder, which is what lets the query share the baseline
+    oracle."""
+    comps = _components(width, height, pixels, color=False)
+    out = _progressive(width, height, comps, 1)
+    zzs = comps[0][1]
+    # ---- scan 3: DC refinement, Ah=1 Al=0 (one raw bit per block) ----
+    out += _sos([(0, 0)], 0, 0, 0x10)
     w = _BitWriter()
-    pred = {"y": 0, "cb": 0, "cr": 0}
-    n_mcu = (height // 16) * (width // 16)
-    mcu = rst = 0
-    for my in range(height // 16):
-        for mx in range(width // 16):
-            for j in range(4):                         # Y blocks TL,TR,BL,BR
-                oy = my * 16 + (j // 2) * 8
-                ox = mx * 16 + (j % 2) * 8
-                block = [ys[(oy + y) * width + ox + x]
-                         for y in range(8) for x in range(8)]
-                pred["y"] = _encode_block(w, block, pred["y"],
-                                          _DC_CODES, _AC_CODES)
-            for key, plane in (("cb", cb_s), ("cr", cr_s)):
-                block = [plane[(my * 8 + y) * cw + mx * 8 + x]
-                         for y in range(8) for x in range(8)]
-                pred[key] = _encode_block(w, block, pred[key],
-                                          _DC_CODES_C, _AC_CODES_C)
-            mcu += 1
-            if restart_interval and mcu % restart_interval == 0 \
-                    and mcu < n_mcu:
-                out += w.flush() + bytes([0xFF, 0xD0 + rst])
-                rst = (rst + 1) % 8
-                w = _BitWriter()
-                pred = {"y": 0, "cb": 0, "cr": 0}
+    for zz in zzs:
+        w.put(zz[0] & 1, 1)
+    out += w.flush()
+    # ---- scan 4: AC refinement, Ah=1 Al=0 (G.1.2.3) ----
+    out += _sos([(0, 0)], 1, 63, 0x10)
+    w = _BitWriter()
+    eobrun = 0
+    # TWO correction-bit pools (T.81 G.1.2.3 / the classic BE vs BR
+    # split): tail bits of blocks already absorbed into the pending
+    # EOB run flush with the EOBn symbol; the CURRENT block's bits
+    # flush after its own symbols — the decoder reads them exactly
+    # where its band walk passes the history-nonzero positions.
+    run_bits: list = []               # prior run blocks' tails
+    cur_bits: list = []               # current block, since last symbol
+
+    def _emit_cur() -> None:
+        for bit in cur_bits:
+            w.put(bit, 1)
+        cur_bits.clear()
+
+    def _emit_eobrun() -> None:
+        nonlocal eobrun
+        if eobrun:
+            rr = eobrun.bit_length() - 1
+            code, ln = _AC_PROG_CODES[rr << 4]
+            w.put(code, ln)
+            if rr:
+                w.put(eobrun - (1 << rr), rr)
+            eobrun = 0
+            for bit in run_bits:
+                w.put(bit, 1)
+            run_bits.clear()
+
+    for zz in zzs:
+        eob = 0
+        for k in range(1, 64):
+            if abs(zz[k]) == 1:       # newly significant at Al=0
+                eob = k
+        run = 0
+        for k in range(1, 64):
+            temp = abs(zz[k])
+            if temp == 0:
+                run += 1
+                continue
+            while run > 15 and k <= eob:
+                _emit_eobrun()
+                code, ln = _AC_PROG_CODES[0xF0]        # ZRL
+                w.put(code, ln)
+                run -= 16
+                _emit_cur()
+            if temp > 1:              # history-nonzero: correction bit
+                cur_bits.append(temp & 1)
+                continue
+            _emit_eobrun()
+            code, ln = _AC_PROG_CODES[(run << 4) | 1]
+            w.put(code, ln)
+            w.put(0 if zz[k] < 0 else 1, 1)
+            _emit_cur()
+            run = 0
+        if run > 0 or cur_bits:       # tail joins the pending EOB run
+            eobrun += 1
+            run_bits.extend(cur_bits)
+            cur_bits.clear()
+            if eobrun == 32767:
+                _emit_eobrun()
+    _emit_eobrun()
     out += w.flush()
     out += b"\xff\xd9"                                 # EOI
     return bytes(out)
+
+
+
+# ---------------------------------------------------------------------------
+# reader: the layout is decided once, then one component walk per mode
+# ---------------------------------------------------------------------------
 
 
 def _decode_block(r: "_BitReader", dc_tab: dict, ac_tab: dict,
@@ -552,198 +795,6 @@ def _decode_block(r: "_BitReader", dc_tab: dict, ac_tab: dict,
         zz[k] = _extend(r.bits(asize), asize)
         k += 1
     return zz, pred
-
-
-def decode_jpeg(data: bytes) -> tuple:
-    """Decode a baseline JFIF -> (width, height, ncomp, pixels):
-    grayscale bytes for 1 component, top-down RGB bytes for 3-component
-    YCbCr 4:2:0 (chroma upsampled by 2x2 replication, converted with
-    the frozen integer ``rgb_from_ycbcr``). Honors the STREAM's
-    quantization and huffman tables (DQT/DHT are parsed, not assumed).
-    Raises ValueError outside the subset (log-and-continue at the
-    operator layer, F6 policy)."""
-    if not data.startswith(b"\xff\xd8"):
-        raise ValueError("jpeg: missing SOI")
-    i = 2
-    width = height = None
-    qtabs: dict = {}
-    huff: dict = {}
-    comps: list = []          # (id, h, v, tq)
-    restart_int = 0           # DRI: MCUs between RST markers (0 = off)
-    scan_sel: dict = {}       # comp id -> (td, ta)
-    scan = None
-    progressive = False
-    scans: list = []          # progressive: (sel, Ss, Se, Ah, Al, entropy)
-    while i + 4 <= len(data):
-        if data[i] != 0xFF:
-            raise ValueError("jpeg: bad marker alignment")
-        marker = data[i + 1]
-        if marker == 0xD9:
-            break
-        (ln,) = struct.unpack(">H", data[i + 2:i + 4])
-        body = data[i + 4:i + 2 + ln]
-        if len(body) != ln - 2:
-            raise ValueError("jpeg: truncated segment")
-        if marker == 0xDB:
-            o = 0
-            while o < len(body):                       # multiple tables OK
-                if body[o] & 0xF0:
-                    raise ValueError("jpeg: 16-bit quant tables unsupported")
-                tq = body[o] & 0x0F
-                qt = [0] * 64
-                for k in range(64):
-                    qt[_ZIGZAG[k]] = body[o + 1 + k]
-                qtabs[tq] = qt
-                o += 65
-        elif marker == 0xC4:
-            o = 0
-            while o + 17 <= len(body):                 # multiple tables OK
-                tc, th = body[o] >> 4, body[o] & 0x0F
-                bits = list(body[o + 1:o + 17])
-                nv = sum(bits)
-                vals = list(body[o + 17:o + 17 + nv])
-                huff[(tc, th)] = _build_decoder(bits, vals)
-                o += 17 + nv
-        elif marker in (0xC0, 0xC2):
-            progressive = marker == 0xC2
-            prec, height, width, nc = struct.unpack(">BHHB", body[:6])
-            if prec != 8:
-                raise ValueError("jpeg: only 8-bit precision supported")
-            if nc not in (1, 3):
-                raise ValueError(
-                    f"jpeg: unsupported component count {nc} "
-                    "(subset is grayscale or YCbCr 4:2:0)")
-            for c in range(nc):
-                cid, hv, tq = body[6 + 3 * c:9 + 3 * c]
-                comps.append((cid, hv >> 4, hv & 0x0F, tq))
-        elif marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
-                        0xCB, 0xCD, 0xCE, 0xCF):
-            raise ValueError("jpeg: only SOF0/SOF2 are supported")
-        elif marker == 0xDD:
-            (restart_int,) = struct.unpack(">H", body[:2])
-        elif marker == 0xDA:
-            ns = body[0]
-            sel = {}
-            for c in range(ns):
-                cid, tdta = body[1 + 2 * c:3 + 2 * c]
-                sel[cid] = (tdta >> 4, tdta & 0x0F)
-            if not progressive:
-                scan_sel = sel
-                scan = data[i + 2 + ln:]
-                break
-            ss, se, ahal = body[1 + 2 * ns], body[2 + 2 * ns], \
-                body[3 + 2 * ns]
-            ent_start = i + 2 + ln
-            ent_end = _find_scan_end(data, ent_start)
-            scans.append((sel, ss, se, ahal >> 4, ahal & 0x0F,
-                          data[ent_start:ent_end]))
-            i = ent_end
-            continue
-        i += 2 + ln
-    if progressive:
-        if restart_int:
-            raise ValueError(
-                "jpeg: restart intervals unsupported in the "
-                "progressive subset")
-        if width is None or not qtabs or not scans or not comps:
-            raise ValueError("jpeg: missing SOF/DQT/SOS")
-        if len(comps) == 1:
-            return _decode_progressive_gray(width, height, comps,
-                                            qtabs, huff, scans)
-        return _decode_progressive_color(width, height, comps, qtabs,
-                                         huff, scans)
-    if width is None or not qtabs or scan is None or not comps:
-        raise ValueError("jpeg: missing SOF/DQT/SOS")
-    end = scan.rfind(b"\xff\xd9")
-    if end < 0:
-        raise ValueError("jpeg: missing EOI")
-    r = _BitReader(scan[:end])
-
-    def tabs(cid):
-        td, ta = scan_sel[cid]
-        try:
-            return huff[(0, td)], huff[(1, ta)]
-        except KeyError:
-            raise ValueError("jpeg: scan references missing huffman table")
-
-    if len(comps) == 1:
-        if width % 8 or height % 8:
-            raise ValueError("jpeg: non-multiple-of-8 dims unsupported")
-        cid, _, _, tq = comps[0]
-        dc_t, ac_t = tabs(cid)
-        qt = qtabs.get(tq)
-        if qt is None:
-            raise ValueError("jpeg: missing quant table")
-        pixels = bytearray(width * height)
-        pred = 0
-        nb = (width // 8) * (height // 8)
-        mcu = rst = 0
-        for by in range(height // 8):
-            for bx in range(width // 8):
-                zz, pred = _decode_block(r, dc_t, ac_t, pred)
-                block = _dequant_idct(zz, qt)
-                for y in range(8):
-                    row = (by * 8 + y) * width + bx * 8
-                    pixels[row:row + 8] = bytes(block[y * 8:(y + 1) * 8])
-                mcu += 1
-                if restart_int and mcu % restart_int == 0 and mcu < nb:
-                    r.restart(rst)            # aligns + resets DC pred
-                    rst = (rst + 1) % 8
-                    pred = 0
-        return width, height, 1, bytes(pixels)
-
-    samp = [(h, v) for _, h, v, _ in comps]
-    if samp != [(2, 2), (1, 1), (1, 1)]:
-        raise ValueError(
-            f"jpeg: unsupported sampling {samp} (subset is 4:2:0)")
-    if width % 16 or height % 16:
-        raise ValueError("jpeg: color dims must be multiples of 16")
-    planes = {c[0]: bytearray((width // max(1, 2 // c[1]))
-                              * (height // max(1, 2 // c[2])))
-              for c in comps}
-    yw, cw = width, width // 2
-    preds = {c[0]: 0 for c in comps}
-    qts = {}
-    for cid, _, _, tq in comps:
-        qts[cid] = qtabs.get(tq)
-        if qts[cid] is None:
-            raise ValueError("jpeg: missing quant table")
-    y_id, cb_id, cr_id = comps[0][0], comps[1][0], comps[2][0]
-    n_mcu = (height // 16) * (width // 16)
-    mcu = rst = 0
-    for my in range(height // 16):
-        for mx in range(width // 16):
-            for j in range(4):
-                zz, preds[y_id] = _decode_block(r, *tabs(y_id),
-                                                preds[y_id])
-                block = _dequant_idct(zz, qts[y_id])
-                oy, ox = my * 16 + (j // 2) * 8, mx * 16 + (j % 2) * 8
-                for y in range(8):
-                    row = (oy + y) * yw + ox
-                    planes[y_id][row:row + 8] = bytes(
-                        block[y * 8:(y + 1) * 8])
-            for cid in (cb_id, cr_id):
-                zz, preds[cid] = _decode_block(r, *tabs(cid), preds[cid])
-                block = _dequant_idct(zz, qts[cid])
-                for y in range(8):
-                    row = (my * 8 + y) * cw + mx * 8
-                    planes[cid][row:row + 8] = bytes(
-                        block[y * 8:(y + 1) * 8])
-            mcu += 1
-            if restart_int and mcu % restart_int == 0 and mcu < n_mcu:
-                r.restart(rst)
-                rst = (rst + 1) % 8
-                for cid in preds:
-                    preds[cid] = 0
-    rgb = bytearray(width * height * 3)
-    yp, cbp, crp = planes[y_id], planes[cb_id], planes[cr_id]
-    for y in range(height):
-        for x in range(width):
-            ci = (y // 2) * cw + (x // 2)              # 2x2 replication
-            r8, g8, b8 = rgb_from_ycbcr(yp[y * yw + x], cbp[ci], crp[ci])
-            o = (y * width + x) * 3
-            rgb[o], rgb[o + 1], rgb[o + 2] = r8, g8, b8
-    return width, height, 3, bytes(rgb)
 
 
 def _first_ac_band(r: "_BitReader", ac_tab: dict, coefs: list,
@@ -828,358 +879,6 @@ def _refine_ac_band(r: "_BitReader", ac_tab: dict, coefs: list,
             eobrun -= 1
 
 
-def _decode_progressive_gray(width: int, height: int, comps: list,
-                             qtabs: dict, huff: dict,
-                             scans: list) -> tuple:
-    """Progressive (SOF2) grayscale decode: spectral selection AND
-    successive approximation (T.81 G.1.2). Coefficients accumulate
-    across scans — first scans (Ah=0) deliver values at Al-bit
-    precision (DC is DPCM of the point-transformed value, AC bands
-    use EOB-run semantics with values scaled by 2^Al), refinement
-    scans (Ah=Al+1) append one magnitude bit per coefficient: a raw
-    bit for DC, the G.1.2.3 correction-bit protocol for AC (newly-
-    significant coefficients coded with size 1, history-nonzero ones
-    refined by interleaved bits, EOB runs carrying the tail bits).
-    Every block dequantizes + IDCTs once at the end."""
-    if width % 8 or height % 8:
-        raise ValueError("jpeg: non-multiple-of-8 dims unsupported")
-    cid, _, _, tq = comps[0]
-    qt = qtabs.get(tq)
-    if qt is None:
-        raise ValueError("jpeg: missing quant table")
-    nbx, nby = width // 8, height // 8
-    nb = nbx * nby
-    coefs = [[0] * 64 for _ in range(nb)]
-    seen_dc = False
-    for sel, ss, se, ah, al, ent in scans:
-        if ah and al != ah - 1:
-            raise ValueError(
-                "jpeg: refinement scan must have Al = Ah - 1")
-        if cid not in sel:
-            raise ValueError("jpeg: scan references unknown component")
-        td, ta = sel[cid]
-        r = _BitReader(ent)
-        if ss == 0:
-            if se != 0:
-                raise ValueError("jpeg: progressive DC scan must be band 0")
-            if ah:                       # DC refinement: one raw bit/block
-                for b in range(nb):
-                    if r.bit():
-                        coefs[b][0] |= 1 << al
-                continue
-            dc_t = huff.get((0, td))
-            if dc_t is None:
-                raise ValueError("jpeg: scan references missing huffman table")
-            pred = 0
-            for b in range(nb):
-                size = r.huff(dc_t)
-                diff = _extend(r.bits(size), size) if size else 0
-                pred += diff
-                coefs[b][0] = pred << al
-            seen_dc = True
-        else:
-            if not 1 <= ss <= se <= 63:
-                raise ValueError("jpeg: bad progressive AC band")
-            ac_t = huff.get((1, ta))
-            if ac_t is None:
-                raise ValueError("jpeg: scan references missing huffman table")
-            if ah:
-                _refine_ac_band(r, ac_t, coefs, nb, ss, se, al)
-            else:
-                _first_ac_band(r, ac_t, coefs, nb, ss, se, al)
-    if not seen_dc:
-        raise ValueError("jpeg: progressive stream has no DC scan")
-    pixels = bytearray(width * height)
-    for by in range(nby):
-        for bx in range(nbx):
-            block = _dequant_idct(coefs[by * nbx + bx], qt)
-            for y in range(8):
-                row = (by * 8 + y) * width + bx * 8
-                pixels[row:row + 8] = bytes(block[y * 8:(y + 1) * 8])
-    return width, height, 1, bytes(pixels)
-
-
-def decode_jpeg_gray(data: bytes) -> tuple:
-    """Back-compat wrapper: decode and require a single-component
-    image -> (width, height, pixel bytes)."""
-    w, h, nc, px = decode_jpeg(data)
-    if nc != 1:
-        raise ValueError("jpeg: not grayscale (use decode_jpeg)")
-    return w, h, px
-
-
-# ---------------------------------------------------------------------------
-# progressive (SOF2) grayscale subset — spectral selection only (r6)
-# ---------------------------------------------------------------------------
-
-# Progressive AC scans emit EOBn symbols (0x10..0xE0 with SSSS=0) the
-# sequential Annex-K table has no codes for, so the progressive AC
-# scan ships its OWN stream-defined table: 255 symbols, all length 8
-# (canonical; code 0xFF stays unused as the spec's all-ones reserve).
-# Wasteful per byte, trivially correct — the decoder honors whatever
-# DHT the stream carries.
-_AC_PROG_BITS = [0, 0, 0, 0, 0, 0, 0, 255, 0, 0, 0, 0, 0, 0, 0, 0]
-_AC_PROG_VALS = list(range(255))
-_AC_PROG_CODES = _build_codes(_AC_PROG_BITS, _AC_PROG_VALS)
-
-
-def render_jpeg_gray_progressive(width: int, height: int,
-                                 pixels: bytes) -> bytes:
-    """Encode row-major grayscale bytes as a PROGRESSIVE (SOF2) JFIF
-    using spectral selection only (T.81 G.1: scan 1 = the DC band,
-    scan 2 = the full AC band 1..63 with EOB-run batching, both with
-    Ah=Al=0). Same frozen coefficient math as the baseline encoder —
-    a block-constant fixture decodes to the identical integer pixels,
-    which is what lets the progressive query share the baseline
-    oracle."""
-    if width % 8 or height % 8 or width <= 0 or height <= 0:
-        raise ValueError("jpeg: dimensions must be positive multiples of 8")
-    if len(pixels) != width * height:
-        raise ValueError("jpeg: pixels length != width*height")
-    zzs = []
-    for by in range(height // 8):
-        for bx in range(width // 8):
-            zzs.append(_fdct_quant(
-                [pixels[(by * 8 + y) * width + bx * 8 + x]
-                 for y in range(8) for x in range(8)]))
-    out = bytearray(b"\xff\xd8")                       # SOI
-    out += _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    zz_q = bytes(QTABLE[_ZIGZAG[k]] for k in range(64))
-    out += _seg(0xDB, b"\x00" + zz_q)                  # DQT id 0
-    out += _seg(0xC2, struct.pack(">BHHB", 8, height, width, 1)
-                + b"\x01\x11\x00")                     # SOF2, 1 comp
-    out += _seg(0xC4, b"\x00" + bytes(_DC_BITS) + bytes(_DC_VALS))
-    out += _seg(0xC4, b"\x10" + bytes(_AC_PROG_BITS)
-                + bytes(_AC_PROG_VALS))
-    # ---- scan 1: DC band (Ss=0, Se=0, Ah=Al=0) ----
-    out += _seg(0xDA, b"\x01\x01\x00" + bytes([0, 0, 0]))
-    w = _BitWriter()
-    pred = 0
-    for zz in zzs:
-        size, mag = _magnitude(zz[0] - pred)
-        pred = zz[0]
-        code, ln = _DC_CODES[size]
-        w.put(code, ln)
-        if size:
-            w.put(mag, size)
-    out += w.flush()
-    # ---- scan 2: AC band 1..63 (Ah=Al=0), EOB runs span blocks ----
-    out += _seg(0xDA, b"\x01\x01\x00" + bytes([1, 63, 0]))
-    w = _BitWriter()
-    eobrun = 0
-
-    def _flush_eob() -> None:
-        nonlocal eobrun
-        while eobrun:
-            chunk = min(eobrun, 32767)
-            rr = chunk.bit_length() - 1
-            code, ln = _AC_PROG_CODES[rr << 4]
-            w.put(code, ln)
-            if rr:
-                w.put(chunk - (1 << rr), rr)
-            eobrun -= chunk
-
-    for zz in zzs:
-        last = 0
-        for k in range(63, 0, -1):
-            if zz[k]:
-                last = k
-                break
-        if last == 0:
-            eobrun += 1
-            continue
-        _flush_eob()
-        run = 0
-        for k in range(1, last + 1):
-            if zz[k] == 0:
-                run += 1
-                continue
-            while run > 15:
-                code, ln = _AC_PROG_CODES[0xF0]        # ZRL
-                w.put(code, ln)
-                run -= 16
-            size, mag = _magnitude(zz[k])
-            code, ln = _AC_PROG_CODES[(run << 4) | size]
-            w.put(code, ln)
-            w.put(mag, size)
-            run = 0
-        if last < 63:
-            eobrun += 1
-    _flush_eob()
-    out += w.flush()
-    out += b"\xff\xd9"                                 # EOI
-    return bytes(out)
-
-
-def render_jpeg_gray_progressive_sa(width: int, height: int,
-                                    pixels: bytes) -> bytes:
-    """Encode grayscale bytes as a PROGRESSIVE (SOF2) JFIF using BOTH
-    progressive dimensions (T.81 G.1): spectral selection AND
-    successive approximation. Four scans — DC first at Al=1 (DPCM of
-    the arithmetic-shifted value), AC band 1..63 first at Al=1
-    (magnitude-shifted, EOB-run batching), DC refinement (one raw bit
-    per block), AC refinement (G.1.2.3: newly-significant coefficients
-    at size 1 with a sign bit, correction bits for history-nonzero
-    coefficients buffered and flushed after the covering symbol).
-    The two passes reassemble every coefficient exactly — (v>>1)<<1
-    plus the refinement bit is v for DC, and +-((|v|>>1)<<1 + bit) for
-    AC — so a fixture decodes to the identical integer pixels as the
-    baseline encoder, which is what lets the query share the baseline
-    oracle."""
-    if width % 8 or height % 8 or width <= 0 or height <= 0:
-        raise ValueError("jpeg: dimensions must be positive multiples of 8")
-    if len(pixels) != width * height:
-        raise ValueError("jpeg: pixels length != width*height")
-    zzs = []
-    for by in range(height // 8):
-        for bx in range(width // 8):
-            zzs.append(_fdct_quant(
-                [pixels[(by * 8 + y) * width + bx * 8 + x]
-                 for y in range(8) for x in range(8)]))
-    out = bytearray(b"\xff\xd8")                       # SOI
-    out += _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    zz_q = bytes(QTABLE[_ZIGZAG[k]] for k in range(64))
-    out += _seg(0xDB, b"\x00" + zz_q)                  # DQT id 0
-    out += _seg(0xC2, struct.pack(">BHHB", 8, height, width, 1)
-                + b"\x01\x11\x00")                     # SOF2, 1 comp
-    out += _seg(0xC4, b"\x00" + bytes(_DC_BITS) + bytes(_DC_VALS))
-    out += _seg(0xC4, b"\x10" + bytes(_AC_PROG_BITS)
-                + bytes(_AC_PROG_VALS))
-    # ---- scan 1: DC first, Al=1 (DPCM of dc >> 1, T.81 A.4 shift) ----
-    out += _seg(0xDA, b"\x01\x01\x00" + bytes([0, 0, 0x01]))
-    w = _BitWriter()
-    pred = 0
-    for zz in zzs:
-        v = zz[0] >> 1
-        size, mag = _magnitude(v - pred)
-        pred = v
-        code, ln = _DC_CODES[size]
-        w.put(code, ln)
-        if size:
-            w.put(mag, size)
-    out += w.flush()
-    # ---- scan 2: AC first, band 1..63, Al=1 (shifted magnitudes) ----
-    out += _seg(0xDA, b"\x01\x01\x00" + bytes([1, 63, 0x01]))
-    w = _BitWriter()
-    eobrun = 0
-
-    def _flush_eob() -> None:
-        nonlocal eobrun
-        while eobrun:
-            chunk = min(eobrun, 32767)
-            rr = chunk.bit_length() - 1
-            code, ln = _AC_PROG_CODES[rr << 4]
-            w.put(code, ln)
-            if rr:
-                w.put(chunk - (1 << rr), rr)
-            eobrun -= chunk
-
-    def _shift1(v: int) -> int:
-        return -((-v) >> 1) if v < 0 else v >> 1
-
-    for zz in zzs:
-        sh = [_shift1(zz[k]) for k in range(64)]
-        last = 0
-        for k in range(63, 0, -1):
-            if sh[k]:
-                last = k
-                break
-        if last == 0:
-            eobrun += 1
-            continue
-        _flush_eob()
-        run = 0
-        for k in range(1, last + 1):
-            if sh[k] == 0:
-                run += 1
-                continue
-            while run > 15:
-                code, ln = _AC_PROG_CODES[0xF0]        # ZRL
-                w.put(code, ln)
-                run -= 16
-            size, mag = _magnitude(sh[k])
-            code, ln = _AC_PROG_CODES[(run << 4) | size]
-            w.put(code, ln)
-            w.put(mag, size)
-            run = 0
-        if last < 63:
-            eobrun += 1
-    _flush_eob()
-    out += w.flush()
-    # ---- scan 3: DC refinement, Ah=1 Al=0 (one raw bit per block) ----
-    out += _seg(0xDA, b"\x01\x01\x00" + bytes([0, 0, 0x10]))
-    w = _BitWriter()
-    for zz in zzs:
-        w.put(zz[0] & 1, 1)
-    out += w.flush()
-    # ---- scan 4: AC refinement, Ah=1 Al=0 (G.1.2.3) ----
-    out += _seg(0xDA, b"\x01\x01\x00" + bytes([1, 63, 0x10]))
-    w = _BitWriter()
-    eobrun = 0
-    # TWO correction-bit pools (T.81 G.1.2.3 / the classic BE vs BR
-    # split): tail bits of blocks already absorbed into the pending
-    # EOB run flush with the EOBn symbol; the CURRENT block's bits
-    # flush after its own symbols — the decoder reads them exactly
-    # where its band walk passes the history-nonzero positions.
-    run_bits: list = []               # prior run blocks' tails
-    cur_bits: list = []               # current block, since last symbol
-
-    def _emit_cur() -> None:
-        for bit in cur_bits:
-            w.put(bit, 1)
-        cur_bits.clear()
-
-    def _emit_eobrun() -> None:
-        nonlocal eobrun
-        if eobrun:
-            rr = eobrun.bit_length() - 1
-            code, ln = _AC_PROG_CODES[rr << 4]
-            w.put(code, ln)
-            if rr:
-                w.put(eobrun - (1 << rr), rr)
-            eobrun = 0
-            for bit in run_bits:
-                w.put(bit, 1)
-            run_bits.clear()
-
-    for zz in zzs:
-        eob = 0
-        for k in range(1, 64):
-            if abs(zz[k]) == 1:       # newly significant at Al=0
-                eob = k
-        run = 0
-        for k in range(1, 64):
-            temp = abs(zz[k])
-            if temp == 0:
-                run += 1
-                continue
-            while run > 15 and k <= eob:
-                _emit_eobrun()
-                code, ln = _AC_PROG_CODES[0xF0]        # ZRL
-                w.put(code, ln)
-                run -= 16
-                _emit_cur()
-            if temp > 1:              # history-nonzero: correction bit
-                cur_bits.append(temp & 1)
-                continue
-            _emit_eobrun()
-            code, ln = _AC_PROG_CODES[(run << 4) | 1]
-            w.put(code, ln)
-            w.put(0 if zz[k] < 0 else 1, 1)
-            _emit_cur()
-            run = 0
-        if run > 0 or cur_bits:       # tail joins the pending EOB run
-            eobrun += 1
-            run_bits.extend(cur_bits)
-            cur_bits.clear()
-            if eobrun == 32767:
-                _emit_eobrun()
-    _emit_eobrun()
-    out += w.flush()
-    out += b"\xff\xd9"                                 # EOI
-    return bytes(out)
-
-
 def _find_scan_end(data: bytes, start: int) -> int:
     """Index of the marker that terminates entropy data at ``start``
     (skips stuffed FF00 and RST markers)."""
@@ -1192,252 +891,275 @@ def _find_scan_end(data: bytes, start: int) -> int:
     raise ValueError("jpeg: unterminated scan")
 
 
-def _mcu_block_idx(nbx: int, hh: int, vv: int, mx: int, my: int,
-                   j: int) -> int:
-    """Raster index of MCU (mx, my)'s j-th block in a component whose
-    grid is nbx blocks wide (T.81 A.2.3 left-to-right, top-to-bottom
-    within the MCU)."""
-    return (my * vv + j // hh) * nbx + mx * hh + j % hh
-
-
-def _decode_progressive_color(width: int, height: int, comps: list,
-                              qtabs: dict, huff: dict,
-                              scans: list) -> tuple:
-    """Progressive (SOF2) YCbCr 4:2:0 decode (r6 — the last
-    non-arithmetic JPEG shape): DC scans are MCU-interleaved across
-    components (per-component DPCM predictors) or single-component
-    raster; AC scans are single-component over that component's own
-    block grid (T.81 requires non-interleaved AC in progressive),
-    reusing the grayscale first-pass/refinement band machinery
-    per component. Reconstruction (dequant + IDCT + 2x2 chroma
-    replication + frozen integer YCbCr->RGB) matches the baseline
-    color path exactly."""
+def _layout(width: int, height: int, comps: list) -> tuple:
+    """Validate the frame against the subset once -> (mcux, mcuy,
+    [(h, v) per component]). One component is walked block by block
+    whatever its sampling factors say (T.81 A.2.2: a non-interleaved
+    scan's MCU is one block); three must be YCbCr 4:2:0."""
+    if len(comps) == 1:
+        if width % 8 or height % 8:
+            raise ValueError("jpeg: non-multiple-of-8 dims unsupported")
+        return width // 8, height // 8, [(1, 1)]
     samp = [(h, v) for _, h, v, _ in comps]
     if samp != [(2, 2), (1, 1), (1, 1)]:
         raise ValueError(
             f"jpeg: unsupported sampling {samp} (subset is 4:2:0)")
     if width % 16 or height % 16:
         raise ValueError("jpeg: color dims must be multiples of 16")
-    qts, grid, coefs = {}, {}, {}
-    for cid, hh, vv, tq in comps:
-        qt = qtabs.get(tq)
-        if qt is None:
-            raise ValueError("jpeg: missing quant table")
-        qts[cid] = qt
-        nbx = width // 8 if hh == 2 else width // 16
-        nby = height // 8 if vv == 2 else height // 16
-        grid[cid] = (nbx, nby)
-        coefs[cid] = [[0] * 64 for _ in range(nbx * nby)]
-    mcux, mcuy = width // 16, height // 16
+    return width // 16, height // 16, samp
+
+
+def _baseline_coefs(r: "_BitReader", comps: list, layout: tuple,
+                    scan_sel: dict, huff: dict, restart_int: int) -> list:
+    """One MCU-interleaved sequential scan -> per-component raster
+    grids of zig-zag coefficients. One DC predictor per component;
+    every ``restart_int`` MCUs the reader byte-aligns past the RSTm
+    marker and the predictors reset."""
+    tabs = []
+    for c in comps:
+        td, ta = scan_sel[c[0]]
+        try:
+            tabs.append((huff[(0, td)], huff[(1, ta)]))
+        except KeyError:
+            raise ValueError("jpeg: scan references missing huffman table")
+    mcux, mcuy, samp = layout
+    coefs = [[None] * (mcux * h * mcuy * v) for h, v in samp]
+    preds = [0] * len(comps)
+    n_mcu = mcux * mcuy
+    rst = 0
+    for m in range(n_mcu):
+        my, mx = divmod(m, mcux)
+        for ci, (h, v) in enumerate(samp):
+            dc_t, ac_t = tabs[ci]
+            for j in range(h * v):
+                zz, preds[ci] = _decode_block(r, dc_t, ac_t, preds[ci])
+                coefs[ci][_mcu_block_idx(mcux * h, h, v, mx, my, j)] = zz
+        if restart_int and (m + 1) % restart_int == 0 and m + 1 < n_mcu:
+            r.restart(rst)
+            rst = (rst + 1) % 8
+            preds = [0] * len(comps)
+    return coefs
+
+
+def _progressive_coefs(comps: list, layout: tuple, huff: dict,
+                       scans: list) -> list:
+    """Progressive (SOF2) coefficient accumulation: spectral selection
+    AND successive approximation (T.81 G.1.2). First scans (Ah=0)
+    deliver values at Al-bit precision — DC scans are DPCM of the
+    point-transformed value, MCU-interleaved across components (one
+    predictor each) or single-component raster; AC bands are
+    single-component over that component's own block grid with
+    EOB-run semantics. Refinement scans (Ah=Al+1) append one magnitude
+    bit per coefficient: a raw bit for DC, the G.1.2.3 correction-bit
+    protocol for AC."""
+    mcux, mcuy, samp = layout
+    index = {c[0]: ci for ci, c in enumerate(comps)}
+    coefs = [[[0] * 64 for _ in range(mcux * h * mcuy * v)]
+             for h, v in samp]
     seen_dc: set = set()
     for sel, ss, se, ah, al, ent in scans:
         if ah and al != ah - 1:
             raise ValueError(
                 "jpeg: refinement scan must have Al = Ah - 1")
-        for cid in sel:
-            if cid not in coefs:
-                raise ValueError("jpeg: scan references unknown component")
+        if not sel or not sel.keys() <= index.keys():
+            raise ValueError("jpeg: scan references unknown component")
         r = _BitReader(ent)
         if ss == 0:
             if se != 0:
                 raise ValueError("jpeg: progressive DC scan must be band 0")
-            comps_in = [c for c in comps if c[0] in sel]
-            walk = []                      # (cid, block raster idx)
-            if len(sel) > 1:               # MCU-interleaved
-                for my in range(mcuy):
-                    for mx in range(mcux):
-                        for cid, hh, vv, _ in comps_in:
-                            for j in range(hh * vv):
-                                walk.append((cid, _mcu_block_idx(
-                                    grid[cid][0], hh, vv, mx, my, j)))
+            cis = [ci for ci, c in enumerate(comps) if c[0] in sel]
+            if len(cis) > 1:               # MCU-interleaved
+                walk = [(ci, _mcu_block_idx(mcux * h, h, v, mx, my, j))
+                        for my in range(mcuy) for mx in range(mcux)
+                        for ci in cis
+                        for h, v in (samp[ci],) for j in range(h * v)]
             else:                          # single component: raster
-                cid, hh, vv, _ = comps_in[0]
-                nbx, nby = grid[cid]
-                walk = [(cid, i) for i in range(nbx * nby)]
+                walk = [(cis[0], b) for b in range(len(coefs[cis[0]]))]
             if ah:                         # DC refinement: raw bits
-                for cid, idx in walk:
+                for ci, b in walk:
                     if r.bit():
-                        coefs[cid][idx][0] |= 1 << al
+                        coefs[ci][b][0] |= 1 << al
                 continue
             dc_tabs, preds = {}, {}
-            for cid in sel:
-                t = huff.get((0, sel[cid][0]))
+            for ci in cis:
+                t = huff.get((0, sel[comps[ci][0]][0]))
                 if t is None:
                     raise ValueError(
                         "jpeg: scan references missing huffman table")
-                dc_tabs[cid], preds[cid] = t, 0
-            for cid, idx in walk:
-                size = r.huff(dc_tabs[cid])
-                diff = _extend(r.bits(size), size) if size else 0
-                preds[cid] += diff
-                coefs[cid][idx][0] = preds[cid] << al
-            seen_dc.update(sel)
+                dc_tabs[ci], preds[ci] = t, 0
+            for ci, b in walk:
+                size = r.huff(dc_tabs[ci])
+                preds[ci] += _extend(r.bits(size), size) if size else 0
+                coefs[ci][b][0] = preds[ci] << al
+            seen_dc.update(cis)
         else:
             if len(sel) != 1:
                 raise ValueError(
                     "jpeg: progressive AC scan must be single-component")
             if not 1 <= ss <= se <= 63:
                 raise ValueError("jpeg: bad progressive AC band")
-            (cid, (td, ta)), = sel.items()
+            (cid, (_, ta)), = sel.items()
             ac_t = huff.get((1, ta))
             if ac_t is None:
                 raise ValueError(
                     "jpeg: scan references missing huffman table")
-            nbx, nby = grid[cid]
+            blocks = coefs[index[cid]]
             band = _refine_ac_band if ah else _first_ac_band
-            band(r, ac_t, coefs[cid], nbx * nby, ss, se, al)
-    if {c[0] for c in comps} - seen_dc:
+            band(r, ac_t, blocks, len(blocks), ss, se, al)
+    if len(seen_dc) < len(comps):
         raise ValueError("jpeg: progressive stream has no DC scan")
-    planes = {}
-    for cid, hh, vv, _ in comps:
-        nbx, nby = grid[cid]
+    return coefs
+
+
+def _reconstruct(width: int, height: int, layout: tuple, coefs: list,
+                 qts: list) -> tuple:
+    """Dequantize + IDCT every block into its component plane, then
+    return the gray plane, or RGB via 2x2 chroma replication and the
+    frozen integer ``rgb_from_ycbcr``."""
+    mcux, _, samp = layout
+    planes = []
+    for (h, _), blocks, qt in zip(samp, coefs, qts):
+        nbx = mcux * h
         pw = nbx * 8
-        plane = bytearray(pw * nby * 8)
-        for by in range(nby):
-            for bx in range(nbx):
-                block = _dequant_idct(coefs[cid][by * nbx + bx],
-                                      qts[cid])
-                for y in range(8):
-                    row = (by * 8 + y) * pw + bx * 8
-                    plane[row:row + 8] = bytes(block[y * 8:(y + 1) * 8])
-        planes[cid] = plane
-    y_id, cb_id, cr_id = comps[0][0], comps[1][0], comps[2][0]
-    yp, cbp, crp = planes[y_id], planes[cb_id], planes[cr_id]
+        plane = bytearray(64 * len(blocks))
+        for b, zz in enumerate(blocks):
+            by, bx = divmod(b, nbx)
+            block = _dequant_idct(zz, qt)
+            for y in range(8):
+                row = (by * 8 + y) * pw + bx * 8
+                plane[row:row + 8] = block[y * 8:(y + 1) * 8]
+        planes.append(plane)
+    if len(planes) == 1:
+        return width, height, 1, bytes(planes[0])
+    yp, cbp, crp = planes
     cw = width // 2
     rgb = bytearray(width * height * 3)
     for y in range(height):
         for x in range(width):
             ci = (y // 2) * cw + (x // 2)              # 2x2 replication
-            r8, g8, b8 = rgb_from_ycbcr(yp[y * width + x],
-                                        cbp[ci], crp[ci])
+            r8, g8, b8 = rgb_from_ycbcr(yp[y * width + x], cbp[ci], crp[ci])
             o = (y * width + x) * 3
             rgb[o], rgb[o + 1], rgb[o + 2] = r8, g8, b8
     return width, height, 3, bytes(rgb)
 
 
-def _write_first_ac_scan(zzs: list) -> bytes:
-    """Entropy body of a first-pass AC band-1..63 scan (Ah=Al=0) over
-    blocks in raster order, EOB runs batched across blocks — shared by
-    the progressive color encoder (uses the stream-defined 255-symbol
-    table, ``_AC_PROG_CODES``)."""
-    w = _BitWriter()
-    eobrun = 0
-
-    def _flush_eob() -> None:
-        nonlocal eobrun
-        while eobrun:
-            chunk = min(eobrun, 32767)
-            rr = chunk.bit_length() - 1
-            code, ln = _AC_PROG_CODES[rr << 4]
-            w.put(code, ln)
-            if rr:
-                w.put(chunk - (1 << rr), rr)
-            eobrun -= chunk
-
-    for zz in zzs:
-        last = 0
-        for k in range(63, 0, -1):
-            if zz[k]:
-                last = k
+def decode_jpeg(data: bytes) -> tuple:
+    """Decode a baseline or progressive JFIF -> (width, height, ncomp,
+    pixels): grayscale bytes for 1 component, top-down RGB bytes for
+    3-component YCbCr 4:2:0 (chroma upsampled by 2x2 replication,
+    converted with the frozen integer ``rgb_from_ycbcr``). The markers
+    are parsed first; then ``_layout`` fixes the MCU grid, one
+    coefficient walk runs per mode, and ``_reconstruct`` turns the
+    coefficients into pixels. Honors the STREAM's
+    quantization and huffman tables (DQT/DHT are parsed, not assumed).
+    Raises ValueError outside the subset (log-and-continue at the
+    operator layer, F6 policy)."""
+    if not data.startswith(b"\xff\xd8"):
+        raise ValueError("jpeg: missing SOI")
+    i = 2
+    width = height = None
+    qtabs: dict = {}
+    huff: dict = {}
+    comps: list = []          # (id, h, v, tq)
+    restart_int = 0           # DRI: MCUs between RST markers (0 = off)
+    scan_sel: dict = {}       # comp id -> (td, ta)
+    scan = None
+    progressive = False
+    scans: list = []          # progressive: (sel, Ss, Se, Ah, Al, entropy)
+    while i + 4 <= len(data):
+        if data[i] != 0xFF:
+            raise ValueError("jpeg: bad marker alignment")
+        marker = data[i + 1]
+        if marker == 0xD9:
+            break
+        (ln,) = struct.unpack(">H", data[i + 2:i + 4])
+        body = data[i + 4:i + 2 + ln]
+        if len(body) != ln - 2:
+            raise ValueError("jpeg: truncated segment")
+        if marker == 0xDB:
+            o = 0
+            while o < len(body):                       # multiple tables OK
+                if body[o] & 0xF0:
+                    raise ValueError("jpeg: 16-bit quant tables unsupported")
+                tq = body[o] & 0x0F
+                qt = [0] * 64
+                for k in range(64):
+                    qt[_ZIGZAG[k]] = body[o + 1 + k]
+                qtabs[tq] = qt
+                o += 65
+        elif marker == 0xC4:
+            o = 0
+            while o + 17 <= len(body):                 # multiple tables OK
+                tc, th = body[o] >> 4, body[o] & 0x0F
+                bits = list(body[o + 1:o + 17])
+                nv = sum(bits)
+                vals = list(body[o + 17:o + 17 + nv])
+                huff[(tc, th)] = _build_decoder(bits, vals)
+                o += 17 + nv
+        elif marker in (0xC0, 0xC2):
+            progressive = marker == 0xC2
+            prec, height, width, nc = struct.unpack(">BHHB", body[:6])
+            if prec != 8:
+                raise ValueError("jpeg: only 8-bit precision supported")
+            if nc not in (1, 3):
+                raise ValueError(
+                    f"jpeg: unsupported component count {nc} "
+                    "(subset is grayscale or YCbCr 4:2:0)")
+            for c in range(nc):
+                cid, hv, tq = body[6 + 3 * c:9 + 3 * c]
+                comps.append((cid, hv >> 4, hv & 0x0F, tq))
+        elif marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
+                        0xCB, 0xCD, 0xCE, 0xCF):
+            raise ValueError("jpeg: only SOF0/SOF2 are supported")
+        elif marker == 0xDD:
+            (restart_int,) = struct.unpack(">H", body[:2])
+        elif marker == 0xDA:
+            ns = body[0]
+            sel = {}
+            for c in range(ns):
+                cid, tdta = body[1 + 2 * c:3 + 2 * c]
+                sel[cid] = (tdta >> 4, tdta & 0x0F)
+            if not progressive:
+                scan_sel = sel
+                scan = data[i + 2 + ln:]
                 break
-        if last == 0:
-            eobrun += 1
+            ss, se, ahal = body[1 + 2 * ns], body[2 + 2 * ns], \
+                body[3 + 2 * ns]
+            ent_start = i + 2 + ln
+            ent_end = _find_scan_end(data, ent_start)
+            scans.append((sel, ss, se, ahal >> 4, ahal & 0x0F,
+                          data[ent_start:ent_end]))
+            i = ent_end
             continue
-        _flush_eob()
-        run = 0
-        for k in range(1, last + 1):
-            if zz[k] == 0:
-                run += 1
-                continue
-            while run > 15:
-                code, ln = _AC_PROG_CODES[0xF0]        # ZRL
-                w.put(code, ln)
-                run -= 16
-            size, mag = _magnitude(zz[k])
-            code, ln = _AC_PROG_CODES[(run << 4) | size]
-            w.put(code, ln)
-            w.put(mag, size)
-            run = 0
-        if last < 63:
-            eobrun += 1
-    _flush_eob()
-    return w.flush()
+        i += 2 + ln
+    if progressive and restart_int:
+        raise ValueError(
+            "jpeg: restart intervals unsupported in the "
+            "progressive subset")
+    if width is None or not qtabs or not comps \
+            or (not scans if progressive else scan is None):
+        raise ValueError("jpeg: missing SOF/DQT/SOS")
+    if not progressive:
+        end = scan.rfind(b"\xff\xd9")
+        if end < 0:
+            raise ValueError("jpeg: missing EOI")
+        r = _BitReader(scan[:end])
+    layout = _layout(width, height, comps)
+    qts = [qtabs.get(c[3]) for c in comps]
+    if None in qts:
+        raise ValueError("jpeg: missing quant table")
+    if progressive:
+        coefs = _progressive_coefs(comps, layout, huff, scans)
+    else:
+        coefs = _baseline_coefs(r, comps, layout, scan_sel, huff,
+                                restart_int)
+    return _reconstruct(width, height, layout, coefs, qts)
 
 
-def render_jpeg_color_progressive(width: int, height: int,
-                                  rgb: bytes) -> bytes:
-    """Encode row-major RGB bytes as a PROGRESSIVE (SOF2) YCbCr 4:2:0
-    JFIF: one MCU-interleaved DC scan (per-component DPCM, Annex K DC
-    tables), then one non-interleaved AC band-1..63 scan per
-    component (T.81 G.1; spectral selection, Ah=Al=0). Same frozen
-    color conversion / subsample / coefficient math as the baseline
-    color encoder, so any image decodes to the identical RGB bytes."""
-    if width % 16 or height % 16 or width <= 0 or height <= 0:
-        raise ValueError("jpeg: color dims must be positive multiples of 16")
-    if len(rgb) != width * height * 3:
-        raise ValueError("jpeg: rgb length != width*height*3")
-    n = width * height
-    ys, cbs, crs = [0] * n, [0] * n, [0] * n
-    for i in range(n):
-        ys[i], cbs[i], crs[i] = ycbcr_from_rgb(
-            rgb[3 * i], rgb[3 * i + 1], rgb[3 * i + 2])
-    cw, ch = width // 2, height // 2
-    cb_s, cr_s = [0] * (cw * ch), [0] * (cw * ch)
-    for y in range(ch):
-        for x in range(cw):
-            idx = [(2 * y + dy) * width + 2 * x + dx
-                   for dy in (0, 1) for dx in (0, 1)]
-            cb_s[y * cw + x] = (sum(cbs[i] for i in idx) + 2) // 4
-            cr_s[y * cw + x] = (sum(crs[i] for i in idx) + 2) // 4
-
-    def _zz_grid(plane: list, pw: int, phh: int) -> list:
-        return [_fdct_quant([plane[(by * 8 + y) * pw + bx * 8 + x]
-                             for y in range(8) for x in range(8)])
-                for by in range(phh // 8) for bx in range(pw // 8)]
-
-    zz_y = _zz_grid(ys, width, height)
-    zz_cb = _zz_grid(cb_s, cw, ch)
-    zz_cr = _zz_grid(cr_s, cw, ch)
-    out = bytearray(b"\xff\xd8")                       # SOI
-    out += _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    zz_q = bytes(QTABLE[_ZIGZAG[k]] for k in range(64))
-    out += _seg(0xDB, b"\x00" + zz_q)                  # DQT id 0 (shared)
-    out += _seg(0xC2, struct.pack(">BHHB", 8, height, width, 3)
-                + b"\x01\x22\x00"                      # Y  2x2, qtab 0
-                + b"\x02\x11\x00"                      # Cb 1x1, qtab 0
-                + b"\x03\x11\x00")                     # Cr 1x1, qtab 0
-    out += _seg(0xC4, b"\x00" + bytes(_DC_BITS) + bytes(_DC_VALS))
-    out += _seg(0xC4, b"\x01" + bytes(_DC_BITS_C) + bytes(_DC_VALS_C))
-    out += _seg(0xC4, b"\x10" + bytes(_AC_PROG_BITS)
-                + bytes(_AC_PROG_VALS))
-    # ---- scan 1: interleaved DC (Ss=0, Se=0, Ah=Al=0) ----
-    out += _seg(0xDA, b"\x03\x01\x00\x02\x10\x03\x10"
-                + bytes([0, 0, 0]))
-    w = _BitWriter()
-    nbx_y = width // 8
-    preds = {"y": 0, "cb": 0, "cr": 0}
-    for my in range(height // 16):
-        for mx in range(width // 16):
-            for j in range(4):
-                zz = zz_y[_mcu_block_idx(nbx_y, 2, 2, mx, my, j)]
-                size, mag = _magnitude(zz[0] - preds["y"])
-                preds["y"] = zz[0]
-                code, ln = _DC_CODES[size]
-                w.put(code, ln)
-                if size:
-                    w.put(mag, size)
-            for key, zzg in (("cb", zz_cb), ("cr", zz_cr)):
-                zz = zzg[my * (cw // 8) + mx]
-                size, mag = _magnitude(zz[0] - preds[key])
-                preds[key] = zz[0]
-                code, ln = _DC_CODES_C[size]
-                w.put(code, ln)
-                if size:
-                    w.put(mag, size)
-    out += w.flush()
-    # ---- scans 2-4: per-component AC band 1..63 (Ah=Al=0) ----
-    for cid, zzg in ((1, zz_y), (2, zz_cb), (3, zz_cr)):
-        out += _seg(0xDA, bytes([1, cid, 0x00]) + bytes([1, 63, 0]))
-        out += _write_first_ac_scan(zzg)
-    out += b"\xff\xd9"                                 # EOI
-    return bytes(out)
+def decode_jpeg_gray(data: bytes) -> tuple:
+    """Back-compat wrapper: decode and require a single-component
+    image -> (width, height, pixel bytes)."""
+    w, h, nc, px = decode_jpeg(data)
+    if nc != 1:
+        raise ValueError("jpeg: not grayscale (use decode_jpeg)")
+    return w, h, px

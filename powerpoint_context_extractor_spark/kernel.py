@@ -1574,14 +1574,8 @@ def _error_result(url: str, error: str) -> KernelResult:
                         n_blocks=0, error=error)
 
 
-def extract_document(url: str, content: bytes | None,
-                     fallback_text: str | None = None) -> KernelResult:
-    """Extract one document. Never raises.
-
-    ``fallback_text`` mirrors the reference's dual-path preference merge
-    (`notes/extractor.py:171-174`): it is NOT used here — the pipeline
-    exposes it as a separate column and coalesces downstream (J2).
-    """
+def extract_document(url: str, content: bytes | None) -> KernelResult:
+    """Extract one document. Never raises."""
     if content is None:
         return _error_result(url, "null_content")
     try:

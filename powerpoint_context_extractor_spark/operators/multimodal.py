@@ -152,10 +152,10 @@ def _decode_payload(kind: str, payload: bytes) -> list:
     if kind == "jpeg":
         # r5: REAL baseline decode (huffman + dequant + IDCT, pure
         # stdlib); r6 adds 3-component YCbCr 4:2:0 — the web default —
-        # and progressive grayscale (SOF2 spectral selection), so the
-        # error surface shrinks to successive-approximation/
-        # arithmetic/progressive-color/exotic-sampling (honest
-        # ValueError, F6 policy)
+        # restart intervals and progressive SOF2 (spectral selection
+        # and successive approximation), so the error surface shrinks
+        # to arithmetic/lossless/exotic-sampling (honest ValueError,
+        # F6 policy)
         w, h, nc, px = decode_jpeg(payload)
         return [float(w), float(h), float(nc), float(sum(px) % 997),
                 float(min(px)), float(max(px))]
@@ -340,15 +340,17 @@ def jpeg_reconstructed_value(v: int) -> int:
     return 0 if rec < 0 else (255 if rec > 255 else rec)
 
 
+def _jpeg_gray_px(doc_id: int) -> bytes:
+    """The gray fixtures' 16x8 pixels: block b constant at
+    ``jpeg_block_value(doc_id, b)``."""
+    row = b"".join(bytes([jpeg_block_value(doc_id, b)]) * 8
+                   for b in range(JPEG_W // 8))
+    return row * JPEG_H
+
+
 def jpeg_payload_for_doc(doc_id: int) -> bytes:
     """Deterministic 16x8 block-constant baseline grayscale JPEG."""
-    px = bytearray(JPEG_W * JPEG_H)
-    for b in range(2):
-        v = jpeg_block_value(doc_id, b)
-        for y in range(JPEG_H):
-            for x in range(8):
-                px[y * JPEG_W + b * 8 + x] = v
-    return render_jpeg_gray(JPEG_W, JPEG_H, bytes(px))
+    return render_jpeg_gray(JPEG_W, JPEG_H, _jpeg_gray_px(doc_id))
 
 
 JPEG_FEATURE_SCHEMA = T.StructType([
@@ -361,16 +363,23 @@ JPEG_FEATURE_SCHEMA = T.StructType([
 ])
 
 
+def _jpeg_gray_features(docs: DataFrame, payload_for_doc) -> DataFrame:
+    """Render + decode one gray JPEG fixture per documents row and emit
+    exact pixel statistics (JPEG_FEATURE_SCHEMA). ``decode_jpeg_gray``
+    raises on a multi-component stream, also under ``python -O``."""
+
+    def _row(doc_id):
+        w, h, px = decode_jpeg_gray(payload_for_doc(doc_id))
+        yield doc_id, w, h, sum(px), min(px), max(px)
+
+    return map_rows(docs.select("doc_id"), _row, JPEG_FEATURE_SCHEMA)
+
+
 def extract_jpeg_features(docs: DataFrame) -> DataFrame:
     """Render + decode a real baseline JPEG per documents row and emit
     exact pixel statistics — the full marker-parse + huffman + dequant
     + IDCT path runs inside Arrow batches, zero shuffles."""
-
-    def _row(doc_id):
-        w, h, px = decode_jpeg_gray(jpeg_payload_for_doc(doc_id))
-        yield doc_id, w, h, sum(px), min(px), max(px)
-
-    return map_rows(docs.select("doc_id"), _row, JPEG_FEATURE_SCHEMA)
+    return _jpeg_gray_features(docs, jpeg_payload_for_doc)
 
 
 # --- real color-JPEG contract path (r6, r5 VERDICT #6) ---------------------
@@ -389,16 +398,17 @@ def jpeg_color_mcu_rgb(doc_id: int, m: int) -> tuple:
             (doc_id * 71 + m * 13) % 256)
 
 
+def _jpeg_color_px(seed: int) -> bytes:
+    """The color fixtures' 32x16 RGB: MCU m constant at
+    ``jpeg_color_mcu_rgb(seed, m)``."""
+    row = b"".join(bytes(jpeg_color_mcu_rgb(seed, m)) * 16
+                   for m in range(JPEG_C_W // 16))
+    return row * JPEG_C_H
+
+
 def jpeg_color_payload_for_doc(doc_id: int) -> bytes:
     """Deterministic 32x16 MCU-constant baseline YCbCr 4:2:0 JPEG."""
-    px = bytearray(JPEG_C_W * JPEG_C_H * 3)
-    for m in range(2):
-        r, g, b = jpeg_color_mcu_rgb(doc_id, m)
-        for y in range(JPEG_C_H):
-            for x in range(16):
-                o = (y * JPEG_C_W + m * 16 + x) * 3
-                px[o], px[o + 1], px[o + 2] = r, g, b
-    return render_jpeg_color(JPEG_C_W, JPEG_C_H, bytes(px))
+    return render_jpeg_color(JPEG_C_W, JPEG_C_H, _jpeg_color_px(doc_id))
 
 
 def jpeg_color_reconstructed_rgb(doc_id: int, m: int) -> tuple:
@@ -428,25 +438,25 @@ def jpeg_color_prog_payload_for_doc(doc_id: int) -> bytes:
     MCU-constant RGB rendered as interleaved-DC + per-component AC
     band scans; decode must land on the identical reconstructed RGB,
     so the query shares the baseline color oracle verbatim."""
-    px = bytearray(JPEG_C_W * JPEG_C_H * 3)
-    for m in range(2):
-        r, g, b = jpeg_color_mcu_rgb(doc_id, m)
-        for y in range(JPEG_C_H):
-            for x in range(16):
-                o = (y * JPEG_C_W + m * 16 + x) * 3
-                px[o], px[o + 1], px[o + 2] = r, g, b
-    return render_jpeg_color_progressive(JPEG_C_W, JPEG_C_H, bytes(px))
+    return render_jpeg_color_progressive(JPEG_C_W, JPEG_C_H,
+                                         _jpeg_color_px(doc_id))
+
+
+def _jpeg_color_features(docs: DataFrame, payload_for_doc) -> DataFrame:
+    """Render + decode one color JPEG fixture per documents row and
+    emit exact RGB statistics (JPEG_COLOR_FEATURE_SCHEMA)."""
+
+    def _row(doc_id):
+        w, h, nc, px = decode_jpeg(payload_for_doc(doc_id))
+        yield doc_id, w, h, nc, sum(px), min(px), max(px)
+
+    return map_rows(docs.select("doc_id"), _row, JPEG_COLOR_FEATURE_SCHEMA)
 
 
 def extract_jpeg_color_prog_features(docs: DataFrame) -> DataFrame:
     """Render + decode a progressive color JPEG per documents row —
     same shape and oracle as the baseline color path."""
-
-    def _row(doc_id):
-        w, h, nc, px = decode_jpeg(jpeg_color_prog_payload_for_doc(doc_id))
-        yield doc_id, w, h, nc, sum(px), min(px), max(px)
-
-    return map_rows(docs.select("doc_id"), _row, JPEG_COLOR_FEATURE_SCHEMA)
+    return _jpeg_color_features(docs, jpeg_color_prog_payload_for_doc)
 
 
 def extract_jpeg_color_features(docs: DataFrame) -> DataFrame:
@@ -455,12 +465,7 @@ def extract_jpeg_color_features(docs: DataFrame) -> DataFrame:
     marker parse (incl. DHT), interleaved-MCU huffman decode, chroma
     upsample, and integer color conversion all run inside Arrow
     batches, zero shuffles."""
-
-    def _row(doc_id):
-        w, h, nc, px = decode_jpeg(jpeg_color_payload_for_doc(doc_id))
-        yield doc_id, w, h, nc, sum(px), min(px), max(px)
-
-    return map_rows(docs.select("doc_id"), _row, JPEG_COLOR_FEATURE_SCHEMA)
+    return _jpeg_color_features(docs, jpeg_color_payload_for_doc)
 
 
 # --- real-AVI (video) contract path + frame sampling (r5) ------------------
@@ -821,13 +826,7 @@ def jpeg_prog_payload_for_doc(doc_id: int) -> bytes:
     baseline grayscale JPEG fixture: the SAME block-constant pixels,
     so the multi-scan decode must land on the identical integer pixel
     function of doc_id the baseline oracle computes."""
-    px = bytearray(JPEG_W * JPEG_H)
-    for b in range(2):
-        v = jpeg_block_value(doc_id, b)
-        for y in range(JPEG_H):
-            for x in range(8):
-                px[y * JPEG_W + b * 8 + x] = v
-    return render_jpeg_gray_progressive(JPEG_W, JPEG_H, bytes(px))
+    return render_jpeg_gray_progressive(JPEG_W, JPEG_H, _jpeg_gray_px(doc_id))
 
 
 def jpeg_dri_payload_for_doc(doc_id: int) -> bytes:
@@ -835,26 +834,14 @@ def jpeg_dri_payload_for_doc(doc_id: int) -> bytes:
     DRI=1 — an RST marker (byte-aligned, DC predictor reset) between
     the two MCUs. Decode must land on the identical pixel function,
     so the query shares the baseline oracle."""
-    px = bytearray(JPEG_W * JPEG_H)
-    for b in range(2):
-        v = jpeg_block_value(doc_id, b)
-        for y in range(JPEG_H):
-            for x in range(8):
-                px[y * JPEG_W + b * 8 + x] = v
-    return render_jpeg_gray(JPEG_W, JPEG_H, bytes(px),
+    return render_jpeg_gray(JPEG_W, JPEG_H, _jpeg_gray_px(doc_id),
                             restart_interval=1)
 
 
 def extract_jpeg_dri_features(docs: DataFrame) -> DataFrame:
     """Render + decode a restart-interval baseline JPEG per documents
     row — same shape and oracle as the baseline path."""
-
-    def _row(doc_id):
-        w, h, nc, px = decode_jpeg(jpeg_dri_payload_for_doc(doc_id))
-        assert nc == 1
-        yield doc_id, w, h, sum(px), min(px), max(px)
-
-    return map_rows(docs.select("doc_id"), _row, JPEG_FEATURE_SCHEMA)
+    return _jpeg_gray_features(docs, jpeg_dri_payload_for_doc)
 
 
 def jpeg_prog_sa_payload_for_doc(doc_id: int) -> bytes:
@@ -864,39 +851,22 @@ def jpeg_prog_sa_payload_for_doc(doc_id: int) -> bytes:
     G.1.2.3). Both progressive dimensions reassemble the coefficients
     exactly, so the decode lands on the same integer pixel function
     of doc_id the baseline oracle computes."""
-    px = bytearray(JPEG_W * JPEG_H)
-    for b in range(2):
-        v = jpeg_block_value(doc_id, b)
-        for y in range(JPEG_H):
-            for x in range(8):
-                px[y * JPEG_W + b * 8 + x] = v
-    return render_jpeg_gray_progressive_sa(JPEG_W, JPEG_H, bytes(px))
+    return render_jpeg_gray_progressive_sa(JPEG_W, JPEG_H,
+                                           _jpeg_gray_px(doc_id))
 
 
 def extract_jpeg_prog_sa_features(docs: DataFrame) -> DataFrame:
     """Render + decode a successive-approximation progressive JPEG per
     documents row and emit exact pixel statistics — same shape and
     oracle as the baseline path."""
-
-    def _row(doc_id):
-        w, h, nc, px = decode_jpeg(jpeg_prog_sa_payload_for_doc(doc_id))
-        assert nc == 1
-        yield doc_id, w, h, sum(px), min(px), max(px)
-
-    return map_rows(docs.select("doc_id"), _row, JPEG_FEATURE_SCHEMA)
+    return _jpeg_gray_features(docs, jpeg_prog_sa_payload_for_doc)
 
 
 def extract_jpeg_prog_features(docs: DataFrame) -> DataFrame:
     """Render + decode a real PROGRESSIVE JPEG per documents row
     (SOF2: DC scan then AC band scan with EOB runs) and emit exact
     pixel statistics — same shape and oracle as the baseline path."""
-
-    def _row(doc_id):
-        w, h, nc, px = decode_jpeg(jpeg_prog_payload_for_doc(doc_id))
-        assert nc == 1
-        yield doc_id, w, h, sum(px), min(px), max(px)
-
-    return map_rows(docs.select("doc_id"), _row, JPEG_FEATURE_SCHEMA)
+    return _jpeg_gray_features(docs, jpeg_prog_payload_for_doc)
 
 
 # --- real-GIF contract path (r6) -------------------------------------------
@@ -954,17 +924,7 @@ def mjpeg_payload_for_doc(doc_id: int) -> bytes:
     mm_features_jpeg_color oracle computes — the container walk, the
     per-frame JPEG decode, and the frame ordering are all under the
     hash."""
-    frames = []
-    for f in range(MJPEG_FRAMES):
-        s = doc_id * 2 + f
-        px = bytearray(JPEG_C_W * JPEG_C_H * 3)
-        for m in range(2):
-            r, g, b = jpeg_color_mcu_rgb(s, m)
-            for y in range(JPEG_C_H):
-                for x in range(16):
-                    o = (y * JPEG_C_W + m * 16 + x) * 3
-                    px[o], px[o + 1], px[o + 2] = r, g, b
-        frames.append(bytes(px))
+    frames = [_jpeg_color_px(doc_id * 2 + f) for f in range(MJPEG_FRAMES)]
     return render_avi_mjpeg(JPEG_C_W, JPEG_C_H, frames, fps=5)
 
 

@@ -279,62 +279,29 @@ def global_order_index(docs: DataFrame, order_cols: list,
                        n_parts: int = 32) -> DataFrame:
     """Contiguous global sequence numbers 0..N-1 in a total order —
     the curriculum / dataloader indexing primitive — WITHOUT a
-    single-partition global sort.
-
-    Classic distributed rank: (1) range-partition + sort locally on
-    the order key (one skew-sampled shuffle; Spark's range sampler
-    places boundaries, but the FINAL index is boundary-independent
-    because ranges are disjoint and locally sorted); (2) local ranks
-    are assigned map-side inside Arrow batches (a running counter per
-    partition — no window, no second shuffle); (3) per-partition
-    counts (a tiny groupBy) turn into offsets with a window over the
-    n_parts-row table, broadcast back. Requires the order key to be
-    unique — pass the id as the last order column. Emits
-    (id, global_idx)."""
-    import pandas as pd
+    single-partition global sort: a row's index is the number of rows
+    before it, i.e. :func:`global_running_offset` over a constant 1.
+    The index is boundary-independent (ranges are disjoint and locally
+    sorted, wherever Spark's range sampler puts the boundaries).
+    Requires the order key to be unique — pass the id as the last
+    order column. Emits (id, global_idx)."""
     if not order_cols:
         raise ValueError("global_order_index: order_cols required")
-    ranged = (docs.repartitionByRange(n_parts, *[F.col(c) for c in
-                                                 order_cols])
-              .sortWithinPartitions(*order_cols)
-              .withColumn("_pid", F.spark_partition_id()))
-
-    def _local_rank(batches):
-        rank = 0                 # running counter across the
-        for pdf in batches:      # partition's Arrow batches
-            n = len(pdf)
-            yield pd.DataFrame({
-                "_pid": pdf["_pid"],
-                "id": pdf["__id"],
-                "_lr": range(rank, rank + n)})
-            rank += n
-
-    keyed = ranged.withColumn("__id", F.col(id_col))
-    id_type = docs.schema[id_col].dataType.simpleString()
-    local = keyed.mapInPandas(
-        _local_rank, schema=f"_pid int, id {id_type}, _lr long")
-    from pyspark.sql import Window as W
-    counts = local.groupBy("_pid").agg(F.count(F.lit(1)).alias("_c"))
-    offsets = (counts
-               .withColumn("_off", F.coalesce(F.sum("_c").over(
-                   W.orderBy("_pid").rowsBetween(
-                       W.unboundedPreceding, -1)), F.lit(0)))
-               .select("_pid", "_off"))
-    return (local.join(F.broadcast(offsets), "_pid")
-            .select(F.col("id").alias(id_col),
-                    (F.col("_lr") + F.col("_off")).cast("long")
-                    .alias("global_idx")))
+    return (global_running_offset(docs.withColumn("_one", F.lit(1)),
+                                  order_cols, "_one", id_col=id_col,
+                                  n_parts=n_parts)
+            .select(id_col, F.col("offset").alias("global_idx")))
 
 
 def global_running_offset(docs: DataFrame, order_cols: list,
                           value_col: str, id_col: str = "doc_id",
                           n_parts: int = 32) -> DataFrame:
     """Exclusive global running sum of ``value_col`` in a total order
-    (r7) — the cumulative-offset sibling of :func:`global_order_index`
-    and the primitive behind GPT-style sequence packing: row i's
+    (r7) — the primitive behind GPT-style sequence packing and, with a
+    constant value of 1, :func:`global_order_index`: row i's
     ``offset`` is the sum of values over all rows strictly before it.
 
-    Same scale shape: range-partition + local sort (one skew-sampled
+    Scale shape: range-partition + local sort (one skew-sampled
     shuffle), per-partition exclusive prefix sums map-side inside
     Arrow batches (a running accumulator, no window), per-partition
     TOTALS turned into partition base offsets with a window over the

@@ -72,6 +72,20 @@ def _as_stream_dir(path: str) -> str:
     return d
 
 
+def _commit_new(table: SnapshotTable, key: str, run_id: str):
+    """foreachBatch sink: append each micro-batch's rows whose ``key``
+    the table has not committed yet — the resume anti-join that keeps
+    a replayed epoch exactly-once."""
+
+    def commit_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        done = table.committed_keys(batch_df.sparkSession, key)
+        if done is not None:
+            batch_df = batch_df.join(done, key, "left_anti")
+        table.append(batch_df, run_id=f"{run_id}-epoch{epoch_id}")
+
+    return commit_batch
+
+
 def stream_extract(spark: SparkSession, pages_dir: str, out_root: str,
                    checkpoint_dir: str, run_id: str = "stream") -> None:
     """Ingest a pages directory as a bounded stream (availableNow) and
@@ -81,15 +95,8 @@ def stream_extract(spark: SparkSession, pages_dir: str, out_root: str,
               .option("maxFilesPerTrigger", 4)
               .parquet(pages_dir))
     extracted = extract_pages(stream)
-
-    def commit_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        done = table.committed_keys(batch_df.sparkSession, "url")
-        if done is not None:
-            batch_df = batch_df.join(done, "url", "left_anti")
-        table.append(batch_df, run_id=f"{run_id}-epoch{epoch_id}")
-
     q = (extracted.writeStream
-         .foreachBatch(commit_batch)
+         .foreachBatch(_commit_new(table, "url", run_id))
          .option("checkpointLocation", checkpoint_dir)
          .trigger(availableNow=True)
          .start())
@@ -196,15 +203,8 @@ def stream_windowed_counts_to_table(spark: SparkSession, events_parquet: str,
                    F.col("n"),
                    F.concat_ws("|", F.col("w.start").cast("string"),
                                F.col("event_type")).alias("win_key")))
-
-    def commit_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        done = table.committed_keys(batch_df.sparkSession, "win_key")
-        if done is not None:
-            batch_df = batch_df.join(done, "win_key", "left_anti")
-        table.append(batch_df, run_id=f"{run_id}-epoch{epoch_id}")
-
     q = (agg.writeStream.outputMode("append")
-         .foreachBatch(commit_batch)
+         .foreachBatch(_commit_new(table, "win_key", run_id))
          .option("checkpointLocation", os.path.join(out_root, "ck"))
          .trigger(availableNow=True)
          .start())
@@ -380,15 +380,8 @@ def stream_extract_warc(spark: SparkSession, warc_dir: str, out_root: str,
               .select("content"))
     pages = map_rows(stream, _warc_row, WARC_PAGE_SCHEMA)
     extracted = extract_pages(pages.select("url", "html"))
-
-    def commit_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        done = table.committed_keys(batch_df.sparkSession, "url")
-        if done is not None:
-            batch_df = batch_df.join(done, "url", "left_anti")
-        table.append(batch_df, run_id=f"{run_id}-epoch{epoch_id}")
-
     q = (extracted.writeStream
-         .foreachBatch(commit_batch)
+         .foreachBatch(_commit_new(table, "url", run_id))
          .option("checkpointLocation", os.path.join(out_root, "ck"))
          .trigger(availableNow=True)
          .start())
